@@ -127,18 +127,75 @@ private[graft] object TransisConnCache {
 /** NUL-framed documents in a single growable file (empty fragments are
   * dropped — F1, reference `transis_consumer.py:89`). Pushed-down doc
   * filters are applied while framing — the file stands in for the
-  * server, so the filter runs where the server's would. */
+  * server, so the filter runs where the server's would.
+  *
+  * The byte range of every matching document is indexed once and the
+  * index is rebuilt only when the file's length or modification time
+  * changes, so an idle poll reads no bytes and a read decodes only the
+  * documents it serves. */
 class FilePayloadTransport(path: String, filters: DocFilters = DocFilters())
     extends PayloadTransport {
-  private def docs(): Array[String] = {
-    val bytes = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path))
-    new String(bytes, java.nio.charset.StandardCharsets.UTF_8)
-      .split("\u0000").iterator.filter(_.trim.nonEmpty)
-      .filter(filters.matches).toArray
+  import FilePayloadTransport.Index
+  @transient private var cached: Index = _
+
+  private def file = java.nio.file.Paths.get(path)
+
+  private def decode(bytes: Array[Byte], from: Int, until: Int): String =
+    new String(bytes, from, until - from, java.nio.charset.StandardCharsets.UTF_8)
+
+  /** The index of the file as it is now: the cached one unless the
+    * file's length or modification time changed since it was built. */
+  private def index(): Index = synchronized {
+    val length = java.nio.file.Files.size(file)
+    val mtime = java.nio.file.Files.getLastModifiedTime(file).toMillis
+    if (cached == null || cached.length != length || cached.mtime != mtime) {
+      val bytes = java.nio.file.Files.readAllBytes(file)
+      val starts, ends = Array.newBuilder[Long]
+      var from = 0
+      while (from <= bytes.length) {
+        var until = from
+        while (until < bytes.length && bytes(until) != 0) until += 1
+        // blank (String.trim-empty) means every byte is <= ' ' unsigned
+        var blank = true
+        var i = from
+        while (blank && i < until) { blank = (bytes(i) & 0xff) <= ' '; i += 1 }
+        if (!blank &&
+            (filters.isEmpty || filters.matches(decode(bytes, from, until)))) {
+          starts += from; ends += until
+        }
+        from = until + 1
+      }
+      cached = Index(length, mtime, starts.result(), ends.result())
+    }
+    cached
   }
-  override def available(): Long = docs().length.toLong
-  override def read(from: Long, until: Long): Iterator[String] =
-    docs().iterator.slice(from.toInt, until.toInt)
+
+  override def available(): Long = index().starts.length.toLong
+
+  override def read(from: Long, until: Long): Iterator[String] = {
+    val ix = index()
+    val n = ix.starts.length.toLong
+    val (lo, hi) = (math.min(from, n).toInt, math.min(until, n).toInt)
+    if (lo >= hi) Iterator.empty
+    else {
+      val base = ix.starts(lo)
+      val bytes = new Array[Byte]((ix.ends(hi - 1) - base).toInt)
+      val ch = java.nio.channels.FileChannel.open(file)
+      try {
+        val buf = java.nio.ByteBuffer.wrap(bytes)
+        while (buf.hasRemaining && ch.read(buf, base + buf.position()) >= 0) ()
+      } finally ch.close()
+      (lo until hi).iterator.map(i =>
+        decode(bytes, (ix.starts(i) - base).toInt, (ix.ends(i) - base).toInt))
+    }
+  }
+}
+
+object FilePayloadTransport {
+  /** Document i of the file as it was at (length, mtime) spans bytes
+    * [starts(i), ends(i)). */
+  private final case class Index(length: Long, mtime: Long,
+                                 starts: Array[Long], ends: Array[Long])
 }
 
 /** Live HTTP transport: the reference's ingress — a streaming GET with
@@ -231,10 +288,12 @@ class HttpPayloadTransport(url: String,
   }
 
   /** Documents currently observed on the endpoint. Against a LIVE push
-    * connection this drains whatever has already arrived (plus at most
-    * one blocking read — the push-stream "wait for the server to send",
-    * reference transis_consumer.py:115-126, bounded by the stall
-    * timeout) and counts incrementally: one connection for the query's
+    * connection this drains whatever has already arrived and counts
+    * incrementally; only when that drain counted nothing new does it
+    * make one blocking read (the push-stream "wait for the server to
+    * send", reference transis_consumer.py:115-126, bounded by the stall
+    * timeout), so counted documents are offered at once and an idle
+    * stream waits here instead of spinning. One connection for the query's
     * whole life, each byte read once. A bounded endpoint signals EOF;
     * growth there is only visible through a fresh GET, so EOF re-opens
     * (at most once per call) and the replayed count folds into the
@@ -259,12 +318,15 @@ class HttpPayloadTransport(url: String,
           }
         }
         if (go) {
-          // one blocking read per call when nothing is buffered — the
-          // only way to tell "no data yet" from "connection ended"
+          // one blocking read per call when nothing is buffered and
+          // nothing new was counted — the only way to tell "no data yet"
+          // from "connection ended"
+          val before = hwm
           var blockedOnce = false
           var inner = true
           while (inner) {
-            if (countIn.available() == 0 && everRead && blockedOnce) inner = false
+            if (countIn.available() == 0 && everRead &&
+                (blockedOnce || hwm > before)) inner = false
             else {
               if (countIn.available() == 0) blockedOnce = true
               val n = countIn.read(chunk, 0, chunk.length)

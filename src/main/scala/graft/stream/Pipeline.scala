@@ -1,6 +1,6 @@
 package graft.stream
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import graft.model.Schemas
@@ -27,24 +27,6 @@ object Pipeline {
     val framed = TransisXml.frame(raw)
     val parsed = TransisXml.parse(framed, Schemas.transisResponse)
     DetectorCounts.toRecords(TransisXml.detectorCountDocs(parsed))
-  }
-
-  /** File-mode streaming source: a directory of NUL-delimited document
-    * files (one push payload per file), `wholetext` so framing sees the
-    * whole payload. */
-  def fileSource(spark: SparkSession, dir: String): DataFrame =
-    spark.readStream.option("wholetext", "true").text(dir)
-      .withColumnRenamed("value", "value")
-
-  /** K6 per-batch metrics JSON (reference `transis_kinesis_connector.py:40-44`):
-    * computed with one distributed agg, no driver-side row loops. */
-  private def batchMetricsJson(batch: DataFrame): String = {
-    val row = batch.agg(
-      count(lit(1)).as("n"),
-      min(col("collectionendtimestamp_plus_3_mins")).as("ts")).head()
-    val n = row.getLong(0)
-    val ts = if (row.isNullAt(1)) null else row.getLong(1)
-    s"""{"records_in_xml_doc": $n, "collectionendtimestamp_plus_3_mins": $ts}"""
   }
 
   /** Sink-side batch ledger: records the highest batchId whose push
@@ -146,19 +128,37 @@ object Pipeline {
 
   /** One micro-batch through the job-bracketed Kinesis sink — the
     * foreachBatch body, extracted so batch-replay semantics are directly
-    * testable. A batch at-or-below the ledger's committed mark is a
-    * restart replay: skipped entirely (no duplicate push, no duplicate
-    * DI job bracket). */
+    * testable. The batch costs one Spark job and one pass over its
+    * documents: the push, which also yields the K6 metrics and the
+    * push counts for the D2 status row. A batch at-or-below the ledger's
+    * committed mark is a restart replay: skipped entirely (no duplicate
+    * push, no duplicate DI job bracket). */
   def pushBatch(batch: DataFrame, batchId: Long, sink: KinesisSink,
                 di: DiFramework, shards: Int,
                 ledger: Option[BatchLedger] = None): Unit = {
     if (ledger.exists(_.lastCommitted >= batchId)) return // replayed batch
     di.startJob() // D1
     try {
-      val out = KinesisSink.toKinesisRecords(batch)
-        .repartition(shards, col("partitionKey"))
-      sink.push(out) // K1-K4 on executors
-      di.logJobStatus(batchMetricsJson(batch)) // D2 + K6/A3/A4
+      // K6 rides the push: the count and first timestamp are observed
+      // while the push job reads the batch, so the batch is read once
+      val metrics = Observation()
+      val observed = batch.observe(metrics, count(lit(1)).as("n"),
+        min(col("collectionendtimestamp_plus_3_mins")).as("ts"))
+      val records = KinesisSink.toKinesisRecords(observed)
+      // the source plans one partition per batch, so one shard needs no
+      // shuffle to keep record order and push grouping
+      val out =
+        if (shards == 1) records.coalesce(1)
+        else records.repartition(shards, col("partitionKey"))
+      val pushed = sink.push(out) // K1-K4 on executors
+      // D2 + K6/A3/A4: the reference's two keys
+      // (transis_kinesis_connector.py:40-44), then the push's counts
+      val m = metrics.get
+      di.logJobStatus(
+        s"""{"records_in_xml_doc": ${m("n")}, """ +
+          s""""collectionendtimestamp_plus_3_mins": ${m("ts")}, """ +
+          s""""attempted": ${pushed.attempted}, "retried": ${pushed.retried}, """ +
+          s""""dropped": ${pushed.dropped}}""")
       di.endJob() // D3
       ledger.foreach(_.markCommitted(batchId))
     } catch {

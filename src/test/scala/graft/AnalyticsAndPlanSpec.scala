@@ -339,7 +339,8 @@ class AnalyticsAndPlanSpec extends AnyFunSuite {
     // bounded summary; the only explodes left are the verify pass's
     // token rows (which the exact recount genuinely needs) and the
     // ≤ k candidate array
-    assert("Generate explode".r.findAllIn(plan).size == 2, plan.take(2000))
+    assert(PlanNodes.explodes(df.queryExecution.executedPlan) == 2,
+      plan.take(2000))
   }
 
   test("plan quality: e10 grid generation never shuffles event rows twice") {

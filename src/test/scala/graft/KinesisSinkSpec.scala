@@ -30,9 +30,9 @@ class KinesisSinkSpec extends AnyFunSuite {
       Seq(None, Throttle, None, Throttle), // first call: records 1,3 throttled
       Seq(None, None))) // retry call: both succeed
     val sleeps = new StringBuilder
-    val (attempted, dropped) =
+    val pushed =
       sink(client, sleeps).pushPartition(Iterator(rec(0), rec(1), rec(2), rec(3)))
-    assert(attempted === 4 && dropped === 0)
+    assert(pushed === PushCounts(attempted = 4, retried = 2, dropped = 0))
     assert(client.calls.size === 2)
     assert(client.calls(1).map(_.partitionKey) === Seq("pk1", "pk3"))
     assert(sleeps.toString === "2000;") // 2 s penalty before the retry
@@ -42,22 +42,22 @@ class KinesisSinkSpec extends AnyFunSuite {
     val client = new StubClient(Seq(
       Seq(Throttle, None),
       Seq(Throttle))) // retry fails again → dropped, no third call
-    val (attempted, dropped) = sink(client).pushPartition(Iterator(rec(0), rec(1)))
-    assert(attempted === 2 && dropped === 1)
+    val pushed = sink(client).pushPartition(Iterator(rec(0), rec(1)))
+    assert(pushed === PushCounts(attempted = 2, retried = 1, dropped = 1))
     assert(client.calls.size === 2)
   }
 
   test("F6: non-retryable error codes are not resubmitted") {
     val client = new StubClient(Seq(Seq(Some("InternalFailure"), None)))
-    val (attempted, dropped) = sink(client).pushPartition(Iterator(rec(0), rec(1)))
-    assert(attempted === 2 && dropped === 1)
+    val pushed = sink(client).pushPartition(Iterator(rec(0), rec(1)))
+    assert(pushed === PushCounts(attempted = 2, retried = 0, dropped = 1))
     assert(client.calls.size === 1) // no retry call for non-throttle errors
   }
 
   test("K1: fixed-size batching into chunks of batchSize (utils.py:33-36)") {
     val client = new StubClient(Seq.fill(3)(Seq.fill(10)(None)))
-    val (attempted, _) = sink(client).pushPartition((0 until 25).iterator.map(rec))
-    assert(attempted === 25)
+    val pushed = sink(client).pushPartition((0 until 25).iterator.map(rec))
+    assert(pushed.attempted === 25)
     assert(client.calls.map(_.size) === List(10, 10, 5))
   }
 
@@ -66,8 +66,8 @@ class KinesisSinkSpec extends AnyFunSuite {
       override def putRecords(r: Seq[KinesisRecord], s: String) =
         throw new RuntimeException("kinesis down")
     }
-    val (attempted, dropped) = sink(boom).pushPartition(Iterator(rec(0), rec(1)))
-    assert(attempted === 2 && dropped === 2) // absorbed, no throw
+    val pushed = sink(boom).pushPartition(Iterator(rec(0), rec(1)))
+    assert(pushed === PushCounts(attempted = 2, retried = 0, dropped = 2)) // absorbed, no throw
   }
 
   test("K4 fail-fast mode: non-lenient sink rethrows (engine default, SURVEY §7.5)") {

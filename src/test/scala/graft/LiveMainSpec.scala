@@ -79,6 +79,53 @@ class LiveMainSpec extends AnyFunSuite {
     }
   }
 
+  test("a live HTTP stream costs two connections however many batches run") {
+    // one counting connection (latestOffset) and one reading connection
+    // (parked between batches); a batch that read its documents twice
+    // would miss the parked connection and re-open the stream each batch
+    val doc = (singleSiteDoc + NUL).getBytes("UTF-8")
+    val srv = new LiveServer(doc)
+    val ckpt = java.nio.file.Files
+      .createTempDirectory("graft-live-http-ckpt").toString
+    val confKeys = Map(
+      "spark.graft.transis.path" -> srv.url,
+      "spark.graft.transis.streamTimeoutSecs" -> "2",
+      "spark.graft.checkpointDir" -> ckpt,
+      "spark.graft.kinesis.streamName" -> "live-stream",
+      "spark.graft.di.schemaName" -> "disch",
+      "spark.graft.di.jobName" -> "graft_live")
+    confKeys.foreach { case (k, v) => spark.conf.set(k, v) }
+    FakeSdkState.reset()
+    val caller = new RecordingCaller
+    val wired = LiveMain.wire(spark,
+      clientFactory = Some(() => new SdkKinesisClient(
+        kinesisClientClass = "graft.fakesdk.KinesisClient",
+        modelPackage = "graft.fakesdk",
+        sdkBytesClass = "graft.fakesdk.SdkBytes")),
+      procCaller = Some(caller))
+    try {
+      // one document per batch: the next is sent once the last batch's
+      // D1->D2->D3 bracket has closed
+      def brackets = caller.synchronized(caller.calls.size) / 3
+      for (batch <- 1 to 3) {
+        val deadline = System.currentTimeMillis() + 60000
+        while (brackets < batch && System.currentTimeMillis() < deadline)
+          Thread.sleep(20)
+        assert(brackets === batch, s"batch $batch did not complete")
+        assert(FakeSdkState.requests.size === batch)
+        if (batch < 3) srv.send(doc)
+      }
+      val procs = caller.synchronized(caller.calls.map(_._1).toList)
+      assert(procs === List.fill(3)(List("disch.strt_job",
+        "disch.log_job_stus", "disch.end_job")).flatten)
+      assert(srv.accepted.get() === 2, s"accepted=${srv.accepted.get()}")
+    } finally {
+      wired.query.stop()
+      srv.close()
+      confKeys.keys.foreach(spark.conf.unset)
+    }
+  }
+
   test("LiveMain boots from a stubbed Secrets Manager secret end-to-end " +
       "(reflective SDK path)") {
     import graft.fakesdk.FakeSecretsState

@@ -11,7 +11,8 @@ import graft.stream.Pipeline
 object PipelineSpecState {
   val pushed = new java.util.concurrent.ConcurrentLinkedQueue[String]()
   val procCalls = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-  def reset(): Unit = { pushed.clear(); procCalls.clear() }
+  val sent = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+  def reset(): Unit = { pushed.clear(); procCalls.clear(); sent.clear() }
 }
 
 class RecordingClient extends KinesisClient {
@@ -20,6 +21,22 @@ class RecordingClient extends KinesisClient {
     records.foreach(r => PipelineSpecState.pushed.add(
       r.partitionKey + "|" + new String(r.data, "UTF-8")))
     PutRecordsResult(0, records.map(_ => PutOutcome(None)))
+  }
+}
+
+/** Throttles every ROZ record on every call (so each is retried once and
+  * then dropped) and records what it was sent and what it accepted. */
+class ThrottlingClient extends KinesisClient {
+  override def putRecords(records: Seq[KinesisRecord],
+                          streamName: String): PutRecordsResult = {
+    val outcomes = records.map { r =>
+      val key = r.partitionKey + "|" + new String(r.data, "UTF-8")
+      PipelineSpecState.sent.add(key)
+      if (r.partitionKey == "ROZ")
+        PutOutcome(Some("ProvisionedThroughputExceededException"))
+      else { PipelineSpecState.pushed.add(key); PutOutcome(None) }
+    }
+    PutRecordsResult(outcomes.count(_.errorCode.isDefined), outcomes)
   }
 }
 
@@ -94,6 +111,75 @@ class PipelineSpec extends AnyFunSuite {
     Pipeline.pushBatch(records, 1L, sink, di, 1, Some(ledger))
     assert(PipelineSpecState.pushed.size === 2)
     assert(ledger.lastCommitted === 1L)
+  }
+
+  /** Runs `pushBatch` on `records` and returns its D2 status JSON and
+    * the Spark jobs and stages it started. */
+  private def pushOnce(records: org.apache.spark.sql.DataFrame,
+                       client: () => KinesisClient): (String, Int, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    PipelineSpecState.reset()
+    val group = s"push-${java.util.UUID.randomUUID()}"
+    val jobs, stages = new java.util.concurrent.atomic.AtomicInteger()
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties.getProperty("spark.jobGroup.id") == group) {
+          jobs.incrementAndGet(); stages.addAndGet(e.stageInfos.size): Unit
+        }
+    }
+    val sc = spark.sparkContext
+    val sink = new KinesisSink(client, "stream", sleeper = _ => ())
+    val di = new DiFramework(new RecordingCaller, "disch", "graft_job")
+    sc.addSparkListener(l)
+    try {
+      // bounded, so an observation that never completes fails the test
+      // instead of hanging the suite
+      scala.concurrent.Await.result(scala.concurrent.Future {
+        sc.setJobGroup(group, "pushBatch")
+        try Pipeline.pushBatch(records, 0L, sink, di, 1)
+        finally sc.clearJobGroup()
+      }(scala.concurrent.ExecutionContext.global),
+        scala.concurrent.duration.Duration(60, "s"))
+      org.apache.spark.graftbridge.ListenerBridge.drain(sc, 10000L)
+    } finally sc.removeSparkListener(l)
+    val calls = PipelineSpecState.procCalls.toArray.map(_.toString)
+    assert(calls.length === 3, calls.mkString("\n"))
+    (calls(1), jobs.get(), stages.get())
+  }
+
+  test("pushBatch is one Spark job and one stage per batch, empty or not") {
+    import spark.implicits._
+    val records = Pipeline.payloadToRecords(
+      Seq(singleSiteDoc, multiSiteDoc).toDF("value"))
+    val (status, jobs, stages) = pushOnce(records, () => new RecordingClient)
+    assert((jobs, stages) === ((1, 1)), status)
+    assert(status.contains(""""records_in_xml_doc": 3, """), status)
+    assert(status.contains(epoch1543.toString), status)
+    assert(status.contains(""""attempted": 3, "retried": 0, "dropped": 0}"""),
+      status)
+    assert(PipelineSpecState.pushed.size === 3)
+
+    // an empty batch still brackets and logs its zero count
+    val empty = Pipeline.payloadToRecords(Seq.empty[String].toDF("value"))
+    val (zero, _, _) = pushOnce(empty, () => new RecordingClient)
+    assert(zero.contains(""""records_in_xml_doc": 0, """), zero)
+    assert(zero.contains(""""attempted": 0, "retried": 0, "dropped": 0}"""),
+      zero)
+  }
+
+  test("D2 status reports the push's retried and dropped counts") {
+    import spark.implicits._
+    val records = Pipeline.payloadToRecords(
+      Seq(singleSiteDoc, multiSiteDoc).toDF("value"))
+    val (status, _, _) = pushOnce(records, () => new ThrottlingClient)
+    // what the client saw: every distinct record it was sent and never
+    // accepted was dropped; every repeat send was a retry
+    val sent = PipelineSpecState.sent.toArray.map(_.toString).toSeq
+    val dropped = sent.distinct.size - PipelineSpecState.pushed.size
+    val retried = sent.size - sent.distinct.size
+    assert(dropped > 0 && retried === dropped)
+    assert(status.contains(
+      s""""attempted": 3, "retried": $retried, "dropped": $dropped}"""), status)
   }
 
   test("D5: K/V extraction from proc response (di_framework.py:44-55)") {

@@ -1,7 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import graft.sink.{KinesisRecord, KinesisSink, SdkKinesisClient}
+import graft.sink.{KinesisRecord, KinesisSink, PushCounts, SdkKinesisClient}
 import graft.fakesdk.FakeSdkState
 
 /** The reflective AWS-SDK adapter driven against offline stubs with the
@@ -67,12 +67,11 @@ class SdkKinesisClientSpec extends AnyFunSuite {
       batchSize = 2, retrySleepMs = 2000, sleeper = slept.addAndGet(_): Unit)
     // 3 records → chunks (2, 1); the fail- record throttles in chunk 1,
     // retries once after the 2 s penalty, throttles again → dropped
-    val (attempted, dropped) = sink.pushPartition(Iterator(
+    val pushed = sink.pushPartition(Iterator(
       KinesisRecord("pk-a", "a".getBytes),
       KinesisRecord("fail-b", "b".getBytes),
       KinesisRecord("pk-c", "c".getBytes)))
-    assert(attempted === 3L)
-    assert(dropped === 1L)
+    assert(pushed === PushCounts(attempted = 3L, retried = 1L, dropped = 1L))
     assert(slept.get() === 2000L)
     // chunk1, chunk1-retry (failed subset only), chunk2
     assert(FakeSdkState.requests.size === 3)

@@ -270,49 +270,6 @@ class TransisSourceSpec extends AnyFunSuite {
       batches.map(_.numInputRows).mkString(","))
   }
 
-  /** Live push server: accepts connections, serves `initial` after the
-    * HTTP headers, and KEEPS the socket open (the reference's real
-    * ingress — one streaming GET that stays up). Counts accepts. */
-  class LiveServer(initial: Array[Byte]) {
-    private val server = new java.net.ServerSocket(0)
-    val accepted = new java.util.concurrent.atomic.AtomicInteger(0)
-    private val socks =
-      new java.util.concurrent.ConcurrentLinkedQueue[java.net.Socket]()
-    @volatile private var running = true
-    def url: String = s"http://127.0.0.1:${server.getLocalPort}/transis/pushservice"
-    private val thread = new Thread(() => {
-      while (running) {
-        try {
-          val sock = server.accept()
-          accepted.incrementAndGet()
-          socks.add(sock)
-          val in = sock.getInputStream
-          val req = new StringBuilder
-          var b = in.read()
-          while (b >= 0 && !req.endsWith("\r\n\r\n")) {
-            req.append(b.toChar)
-            b = if (req.endsWith("\r\n\r\n")) -1 else in.read()
-          }
-          val out = sock.getOutputStream
-          out.write("HTTP/1.0 200 OK\r\nContent-Type: text/xml\r\n\r\n"
-            .getBytes("UTF-8"))
-          out.write(initial)
-          out.flush() // socket intentionally left open
-        } catch {
-          case _: Throwable if !running => ()
-          case _: java.io.IOException => ()
-        }
-      }
-    })
-    thread.setDaemon(true)
-    thread.start()
-    def close(): Unit = {
-      running = false
-      server.close()
-      socks.forEach(s => try s.close() catch { case _: java.io.IOException => () })
-    }
-  }
-
   test("HTTP offsets are incremental: O(1) connections across micro-batches") {
     // Live connection, 2 docs, 1 doc/batch → 2 micro-batches. Round-2
     // behavior opened a full-stream-re-reading connection per trigger
@@ -331,6 +288,40 @@ class TransisSourceSpec extends AnyFunSuite {
         assert(srv.accepted.get() === 2, s"accepted=${srv.accepted.get()}")
       } finally q.stop()
     } finally srv.close()
+  }
+
+  test("available() offers counted documents at once; an idle call still blocks") {
+    val srv = new LiveServer(payloadBytes("doc-1"))
+    try {
+      val t = new HttpPayloadTransport(srv.url, stallTimeoutMs = 3000)
+      assert(t.available() === 1L)
+      srv.send(payloadBytes("doc-2"))
+      Thread.sleep(500) // doc 2 is in the socket buffer before the call
+      val t0 = System.nanoTime()
+      assert(t.available() === 2L)
+      val offeredMs = (System.nanoTime() - t0) / 1000000
+      assert(offeredMs < 1500, s"counted doc held for $offeredMs ms")
+      // nothing new: one blocking read up to the stall timeout, same socket
+      val t1 = System.nanoTime()
+      assert(t.available() === 2L)
+      val idleMs = (System.nanoTime() - t1) / 1000000
+      assert(idleMs >= 2500, s"idle call returned after $idleMs ms")
+      assert(srv.accepted.get() === 1)
+      t.close()
+    } finally srv.close()
+  }
+
+  test("file transport serves documents by index and sees the file grow") {
+    val f = Files.createTempFile("transis-index", ".payload").toString
+    Files.write(Paths.get(f),
+      ("doc-a" + NUL + " \n" + NUL + "doc-\u00e9" + NUL).getBytes("UTF-8"))
+    val t = new graft.sources.FilePayloadTransport(f)
+    assert(t.available() === 2L) // the blank fragment is not a document
+    assert(t.read(1, 2).toList === List("doc-\u00e9"))
+    writePayload(f, "doc-c", "doc-d")
+    assert(t.available() === 4L)
+    assert(t.read(1, 4).toList === List("doc-\u00e9", "doc-c", "doc-d"))
+    assert(t.read(3, 9).toList === List("doc-d"))
   }
 
   test("AvailableNow over HTTP resumes from checkpoint, one doc per batch") {
