@@ -88,16 +88,6 @@ object Views {
     graft.sources.History.readPinned(spark, lakePath)
       .createOrReplaceTempView(name)
 
-  /** Time-travel view: the lake AS OF a retained manifest version
-    * ([[graft.sources.History.readPinned(spark:*,path:*,version:*)*]]),
-    * for pure-SQL audit reads — `spark.sql("SELECT … FROM history_v7")`
-    * replays the state that commit published. Fails loudly if the
-    * version was vacuumed. */
-  def registerLakeAt(spark: SparkSession, lakePath: String, version: Long,
-                     name: String): Unit =
-    graft.sources.History.readPinned(spark, lakePath, version)
-      .createOrReplaceTempView(name)
-
   /** Make the engine's custom Catalyst expressions SQL-callable on an
     * existing session — the same function set [[GraftExtensions]]
     * injects at builder time (both iterate

@@ -135,12 +135,21 @@ object FrequentItems {
     * items; null ELEMENTS (possible only when the array type admits
     * them) are stripped once up front so the sketch, the total and the
     * verify explode all see the same null-free stream — the exploded
-    * path's isNotNull filter, applied pre-explode. */
+    * path's isNotNull filter, applied pre-explode. That strip is the
+    * `filter()` higher-order function, which has no generated code: an
+    * array type with `containsNull = true` takes the plan out of
+    * whole-stage codegen, so callers that can build a null-free array
+    * (`array_remove(split(…), "")`, as a06 does) should.
+    *
+    * `tokenArrays` must have exactly one column, the token array. */
   def heavyHittersTokens(tokenArrays: DataFrame, itemCol: String,
                          k: Int, phi: Double): DataFrame = {
     require(phi > 1.0 / k,
       s"phi=$phi must exceed 1/k=${1.0 / k}: the Misra-Gries summary only " +
         "guarantees items above N/k survive")
+    require(tokenArrays.columns.length == 1,
+      "heavyHittersTokens needs exactly one (array<string>) column, got " +
+        tokenArrays.columns.mkString("[", ", ", "]"))
     val arrCol = tokenArrays.columns.head
     val at = tokenArrays.schema.head.dataType match {
       case a: org.apache.spark.sql.types.ArrayType

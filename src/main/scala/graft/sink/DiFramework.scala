@@ -42,7 +42,6 @@ class JdbcProcCaller(url: String, props: java.util.Properties)
 class DiFramework(caller: ProcCaller, schemaName: String, jobName: String) {
 
   @volatile private var jobId: Option[String] = None
-  def currentJobId: Option[String] = jobId
 
   /** D5: `[x for x in response if x["key"]==key][0]["value"]` — extract a
     * value from the procs' `[{"key":…,"value":…}]` JSON text response

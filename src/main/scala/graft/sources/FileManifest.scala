@@ -1021,13 +1021,6 @@ object FileManifest {
         .exists(seg => seg.startsWith("_") || seg.startsWith(".")))
       .sorted.toSeq
 
-  /** List the non-hidden data files of one partition dir, as names. */
-  def listDataFiles(fs: FileSystem, dir: Path): Seq[String] =
-    fs.listStatus(dir)
-      .filter(s => s.isFile && !s.getPath.getName.startsWith("_") &&
-        !s.getPath.getName.startsWith("."))
-      .map(_.getPath.getName).sorted.toSeq
-
   /** Recursively list every non-hidden data file under `qRoot` — ANY
     * partition depth including none — as qRoot-relative paths. Hidden
     * segments (`_staging`, `_manifests`, `_ledger`, `.…`) prune whole

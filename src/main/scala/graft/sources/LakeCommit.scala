@@ -213,12 +213,4 @@ object LakeCommit {
       }
     }
   }
-
-  /** Remove the whole `_staging` area (e.g. before a fresh batch load of
-    * a path previously used by the streaming archive). */
-  def dropStaging(spark: SparkSession, lakePath: String): Unit = {
-    val p = new Path(s"$lakePath/_staging")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(p, true): Unit
-  }
 }

@@ -182,13 +182,4 @@ object MaintenanceLease {
           "the pass outlived its TTL or was superseded; deleting " +
           "nothing further")
   }
-
-  /** Run `body` under the lease, renewing is the caller's concern
-    * (one acquire covers `ttlMs`); releases on exit. */
-  def withLease[T](fs: FileSystem, lakePath: String, owner: String,
-                   ttlMs: Long)(body: => T): T = {
-    acquire(fs, lakePath, owner, ttlMs): Unit
-    try body
-    finally release(fs, lakePath, owner): Unit
-  }
 }

@@ -42,29 +42,89 @@ trait PayloadTransport extends Serializable {
   def close(): Unit = ()
 }
 
-/** Pull-based NUL framer over a byte stream: produces exactly one
-  * document per call and never reads past a document boundary — so a
-  * LIVE connection can be parked between micro-batches without blocking
-  * on bytes the server hasn't sent yet (an eagerly-prefetching iterator
-  * would hang the batch waiting for the next document's terminator). */
-private[graft] final class NulFramer(in: java.io.InputStream) {
-  private val buf = new java.io.ByteArrayOutputStream()
+/** The NUL framer every transport uses (F1, reference
+  * `transis_consumer.py:88-89,127-139`): reads the stream in chunks into
+  * its own buffer, splits on byte 0, drops blank fragments and keeps the
+  * documents `filters` match. A document is decoded only when it is served
+  * ([[text]]) or when a filter needs its text.
+  *
+  * [[advance]] reads from the stream only when no complete document is
+  * buffered, so a LIVE connection can be parked between micro-batches
+  * without waiting on bytes the server hasn't sent yet; bytes already read
+  * for the next document stay buffered and travel with the framer. A
+  * trailing unterminated fragment at EOF is discarded — a connection cut
+  * mid-document must not surface a truncated doc. */
+private[graft] final class NulFramer(in: java.io.InputStream,
+                                     filters: DocFilters = DocFilters()) {
+  private var buf = new Array[Byte](64 << 10)
+  private var base = 0L // stream offset of buf(0)
+  private var head = 0  // first byte not yet framed
+  private var scan = 0  // buf[head, scan) holds no 0 byte
+  private var limit = 0 // buf[0, limit) holds bytes read
   private var eof = false
-  /** Next complete non-empty document, or null at EOF (a trailing
-    * unterminated fragment is discarded — a connection cut mid-document
-    * must not surface a truncated doc). */
-  def nextDoc(): String = {
-    while (!eof) {
-      val b = in.read()
-      if (b < 0) { eof = true; buf.reset() }
-      else if (b == 0) {
-        val doc = buf.toString(java.nio.charset.StandardCharsets.UTF_8.name())
-        buf.reset()
-        if (doc.trim.nonEmpty) return doc
-      } else buf.write(b)
-    }
-    null
+  private var from, until = 0 // buf[from, until) is the current document
+  private var decoded: String = _
+
+  /** Stream offsets [docStart, docEnd) of the current document. */
+  def docStart: Long = base + from
+  def docEnd: Long = base + until
+
+  /** The current document's text, decoded once; valid until the next
+    * [[advance]] or [[fill]]. */
+  def text: String = {
+    if (decoded == null) decoded = new String(buf, from, until - from,
+      java.nio.charset.StandardCharsets.UTF_8)
+    decoded
   }
+
+  /** Move to the next document already complete in the buffer; false
+    * when there is none. Reads nothing from the stream. */
+  def nextBuffered(): Boolean = {
+    var found = false
+    while (!found && scan < limit) {
+      val b = buf
+      val l = limit
+      var s = scan
+      while (s < l && b(s) != 0) s += 1
+      scan = s
+      if (s < l) {
+        from = head; until = s; head = s + 1; scan = head
+        decoded = null
+        // blank (String.trim-empty in UTF-8): every byte is <= ' ' unsigned
+        var i = from
+        while (i < until && (b(i) & 0xff) <= ' ') i += 1
+        found = i < until && (filters.isEmpty || filters.matches(text))
+      }
+    }
+    found
+  }
+
+  /** One read from the stream into the buffer, after dropping the bytes
+    * already framed; false at EOF. */
+  def fill(): Boolean = {
+    if (head > 0) {
+      System.arraycopy(buf, head, buf, 0, limit - head)
+      base += head; scan -= head; limit -= head; head = 0
+    }
+    if (limit == buf.length) buf = java.util.Arrays.copyOf(buf, buf.length * 2)
+    if (!eof) {
+      val n = in.read(buf, limit, buf.length - limit)
+      if (n < 0) eof = true else limit += n
+    }
+    !eof
+  }
+
+  /** Move to the next document, reading only while no complete one is
+    * buffered; false at EOF. */
+  def advance(): Boolean = {
+    var found = nextBuffered()
+    while (!found && fill()) found = nextBuffered()
+    found
+  }
+
+  /** Bytes the stream can give without blocking. */
+  def ready: Int = in.available()
+
   def close(): Unit = try in.close() catch { case _: java.io.IOException => () }
 }
 
@@ -124,8 +184,10 @@ private[graft] object TransisConnCache {
   }
 }
 
-/** NUL-framed documents in a single growable file (empty fragments are
-  * dropped — F1, reference `transis_consumer.py:89`). Pushed-down doc
+/** NUL-framed documents in a single growable file, framed by the same
+  * [[NulFramer]] as the live stream: blank fragments are dropped (F1,
+  * reference `transis_consumer.py:89`) and an unterminated tail — a
+  * document still being written — is not a document yet. Pushed-down doc
   * filters are applied while framing — the file stands in for the
   * server, so the filter runs where the server's would.
   *
@@ -149,22 +211,10 @@ class FilePayloadTransport(path: String, filters: DocFilters = DocFilters())
     val length = java.nio.file.Files.size(file)
     val mtime = java.nio.file.Files.getLastModifiedTime(file).toMillis
     if (cached == null || cached.length != length || cached.mtime != mtime) {
-      val bytes = java.nio.file.Files.readAllBytes(file)
       val starts, ends = Array.newBuilder[Long]
-      var from = 0
-      while (from <= bytes.length) {
-        var until = from
-        while (until < bytes.length && bytes(until) != 0) until += 1
-        // blank (String.trim-empty) means every byte is <= ' ' unsigned
-        var blank = true
-        var i = from
-        while (blank && i < until) { blank = (bytes(i) & 0xff) <= ' '; i += 1 }
-        if (!blank &&
-            (filters.isEmpty || filters.matches(decode(bytes, from, until)))) {
-          starts += from; ends += until
-        }
-        from = until + 1
-      }
+      val framer = new NulFramer(java.nio.file.Files.newInputStream(file), filters)
+      try while (framer.advance()) { starts += framer.docStart; ends += framer.docEnd }
+      finally framer.close()
       cached = Index(length, mtime, starts.result(), ends.result())
     }
     cached
@@ -247,9 +297,8 @@ class HttpPayloadTransport(url: String,
       throw new java.io.IOException(s"HTTP $code from $url")
     // the reference reads the socket one byte at a time
     // (transis_consumer.py:127, iter_content(1)) — a pathology SURVEY
-    // §4.1 calls out, not something to reproduce: buffer the stream so
-    // per-byte framing reads hit memory, not the socket
-    new java.io.BufferedInputStream(conn.getInputStream, 64 << 10)
+    // §4.1 calls out, not something to reproduce: NulFramer reads chunks
+    conn.getInputStream
   }
 
   private def cacheKey: String = s"$effectiveUrl|$username"
@@ -263,29 +312,10 @@ class HttpPayloadTransport(url: String,
   // endpoint EOF closes it and the NEXT call re-opens (a fresh GET is the
   // only way plain HTTP exposes growth), counting the replay cheaply and
   // taking the high-water mark.
-  @transient private var countIn: java.io.InputStream = _
-  @transient private var countBuf: java.io.ByteArrayOutputStream = _
+  @transient private var counter: NulFramer = _
   private var connCount = 0L // matching docs framed on current connection
   private var hwm = 0L       // high-water mark across connections
   private var everRead = false
-
-  /** Feed `n` bytes into the counting framer. */
-  private def feed(chunk: Array[Byte], n: Int): Unit = {
-    var i = 0
-    while (i < n) {
-      val b = chunk(i)
-      if (b == 0) {
-        val doc = countBuf.toString(
-          java.nio.charset.StandardCharsets.UTF_8.name())
-        countBuf.reset()
-        if (doc.trim.nonEmpty && filters.matches(doc)) {
-          connCount += 1
-          if (connCount > hwm) hwm = connCount
-        }
-      } else countBuf.write(b.toInt)
-      i += 1
-    }
-  }
 
   /** Documents currently observed on the endpoint. Against a LIVE push
     * connection this drains whatever has already arrived and counts
@@ -302,17 +332,15 @@ class HttpPayloadTransport(url: String,
     * reopened unconditionally after any EOF, reading a bounded endpoint
     * twice per trigger). */
   override def available(): Long = synchronized {
-    val chunk = new Array[Byte](8192)
     var openedThisCall = false
     var go = true
     try {
       while (go) {
-        if (countIn == null) {
+        if (counter == null) {
           if (openedThisCall) go = false // this call's fresh GET already drained
           else {
-            countIn = open()
+            counter = new NulFramer(open(), filters)
             openedThisCall = true
-            countBuf = new java.io.ByteArrayOutputStream()
             connCount = 0
             everRead = false
           }
@@ -325,17 +353,20 @@ class HttpPayloadTransport(url: String,
           var blockedOnce = false
           var inner = true
           while (inner) {
-            if (countIn.available() == 0 && everRead &&
+            if (counter.ready == 0 && everRead &&
                 (blockedOnce || hwm > before)) inner = false
             else {
-              if (countIn.available() == 0) blockedOnce = true
-              val n = countIn.read(chunk, 0, chunk.length)
-              if (n < 0) { // EOF: bounded endpoint fully drained
-                countIn.close(); countIn = null; inner = false
-              } else { everRead = true; feed(chunk, n) }
+              if (counter.ready == 0) blockedOnce = true
+              if (!counter.fill()) { // EOF: bounded endpoint fully drained
+                counter.close(); counter = null; inner = false
+              } else {
+                everRead = true
+                while (counter.nextBuffered()) connCount += 1
+                hwm = math.max(hwm, connCount)
+              }
             }
           }
-          if (countIn != null) go = false // alive and drained: done
+          if (counter != null) go = false // alive and drained: done
         }
       }
     } catch {
@@ -346,19 +377,14 @@ class HttpPayloadTransport(url: String,
         // recovered server resumes on this same socket incrementally)
         ()
       case _: java.io.IOException => // broken connection: reconnect next
-        if (countIn != null) {
-          try countIn.close() catch { case _: java.io.IOException => () }
-        }
-        countIn = null
+        if (counter != null) counter.close()
+        counter = null
     }
     hwm
   }
 
   override def close(): Unit = synchronized {
-    if (countIn != null) {
-      try countIn.close() catch { case _: java.io.IOException => () }
-      countIn = null
-    }
+    if (counter != null) { counter.close(); counter = null }
     // release any connection parked for this endpoint in THIS JVM (local
     // mode / driver-side reads); executor-side entries age out through
     // the server's own idle timeout and the IOException-miss fallback
@@ -371,16 +397,15 @@ class HttpPayloadTransport(url: String,
     * open — once the batch is fully served. */
   override def read(from: Long, until: Long): Iterator[String] = {
     val framer = TransisConnCache.take(cacheKey, from).getOrElse {
-      val f = new NulFramer(open())
+      val f = new NulFramer(open(), filters)
       var skipped = 0L
       while (skipped < from) {
-        val d = f.nextDoc()
-        if (d == null) {
+        if (!f.advance()) {
           f.close()
           throw new java.io.IOException(
             s"transis stream ended before resume offset $from")
         }
-        if (filters.matches(d)) skipped += 1
+        skipped += 1
       }
       f
     }
@@ -389,13 +414,12 @@ class HttpPayloadTransport(url: String,
       override def hasNext: Boolean = served < until
       override def next(): String = {
         if (!hasNext) throw new NoSuchElementException
-        var d = framer.nextDoc()
-        while (d != null && !filters.matches(d)) d = framer.nextDoc()
-        if (d == null) {
+        if (!framer.advance()) {
           framer.close()
           throw new java.io.IOException(
             s"transis stream ended at doc $served before requested $until")
         }
+        val d = framer.text
         served += 1
         if (served == until) TransisConnCache.park(cacheKey, until, framer)
         d

@@ -36,14 +36,4 @@ object WindowedAnalytics {
       .select(col("window.start").as("w_start"),
         col("window.end").as("w_end"),
         col("region"), col("total_count"), col("n_detectors"))
-
-  /** Per-site volume with the same window contract. */
-  def siteVolumes(records: DataFrame): DataFrame =
-    withEventTime(records)
-      .withWatermark("eventTime", "10 minutes")
-      .groupBy(window(col("eventTime"), "5 minutes"), col("siteId"))
-      .agg(sum(aggregate(map_values(col("detectorCounts")),
-        lit(0), (acc, v) => acc + v.cast("int"))).as("total_count"))
-      .select(col("window.start").as("w_start"), col("siteId"),
-        col("total_count"))
 }

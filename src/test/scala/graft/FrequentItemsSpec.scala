@@ -160,6 +160,17 @@ class FrequentItemsSpec extends AnyFunSuite {
     assert(got === Map("a" -> 2L), got)
   }
 
+  test("array-input sketch: a second input column is rejected") {
+    // the array column is the only column; an extra one must not be
+    // silently ignored (or taken for the array)
+    import spark.implicits._
+    val twoCols = Seq((Seq("a", "b"), "en")).toDF("words", "lang")
+    val ex = intercept[IllegalArgumentException] {
+      FrequentItems.heavyHittersTokens(twoCols, "word", k = 4, phi = 0.5)
+    }
+    assert(ex.getMessage.contains("exactly one"), ex.getMessage)
+  }
+
   test("grouped array-input sketch == grouped exploded sketch") {
     import spark.implicits._
     val rnd = new scala.util.Random(23)

@@ -324,6 +324,70 @@ class TransisSourceSpec extends AnyFunSuite {
     assert(t.read(3, 9).toList === List("doc-d"))
   }
 
+  /** Serves `bytes` at most `chunk` bytes per read. */
+  class ChunkedStream(bytes: Array[Byte], chunk: Int) extends java.io.InputStream {
+    private var pos = 0
+    override def read(): Int =
+      if (pos < bytes.length) { pos += 1; bytes(pos - 1) & 0xff } else -1
+    override def read(dst: Array[Byte], off: Int, len: Int): Int =
+      if (pos >= bytes.length) -1
+      else {
+        val n = math.min(math.min(len, chunk), bytes.length - pos)
+        System.arraycopy(bytes, pos, dst, off, n); pos += n; n
+      }
+  }
+
+  test("one NUL framer: 1-byte and 8 KB reads frame like the file transport") {
+    val lead = singleSiteDoc + NUL + " " + NUL + "\t" + NUL + "\r\n" + NUL +
+      "\u0001\u001f" + NUL + topologyDoc + NUL + "doc-é漢🚦" + NUL
+    // a NUL as the last byte of the first 8 KB chunk and the first of the
+    // second, then a document longer than a chunk and an unterminated tail
+    val pad = "p" * (8191 - lead.getBytes("UTF-8").length)
+    val text = lead + pad + NUL + NUL + "L" * 20000 + NUL + multiSiteDoc + NUL +
+      "doc-tail"
+    val bytes = text.getBytes("UTF-8")
+    assert(bytes(8191) == 0 && bytes(8192) == 0)
+    val expected = text.split(NUL, -1).dropRight(1).filter(_.trim.nonEmpty).toList
+    assert(expected.length === 6)
+    def frame(in: java.io.InputStream): List[String] = {
+      val f = new graft.sources.NulFramer(in)
+      Iterator.continually(f).takeWhile(_.advance()).map(_.text).toList
+    }
+    assert(frame(new ChunkedStream(bytes, 1)) === expected)
+    assert(frame(new ChunkedStream(bytes, 8192)) === expected)
+    val f = Files.createTempFile("transis-framer", ".payload")
+    Files.write(f, bytes)
+    val file = new graft.sources.FilePayloadTransport(f.toString)
+    assert(file.read(0, file.available()).toList === expected)
+    // a pushed-down doc_type filter counts the same over HTTP and file
+    val dcm = graft.sources.DocFilters(Some("DetectorCountMessages"))
+    val srv = new LoopbackServer(Seq(bytes))
+    try {
+      val http = new HttpPayloadTransport(srv.url, stallTimeoutMs = 5000, filters = dcm)
+      val filtered = new graft.sources.FilePayloadTransport(f.toString, dcm)
+      assert(http.available() === 2L)
+      assert(http.available() === filtered.available())
+      assert(http.read(0, 2).toList === filtered.read(0, 2).toList)
+      http.close()
+    } finally srv.close()
+  }
+
+  test("a read returns its document without waiting for the partly sent next one") {
+    val srv = new LiveServer(payloadBytes("doc-1") ++ "doc-".getBytes("UTF-8"))
+    try {
+      val t = new HttpPayloadTransport(srv.url, stallTimeoutMs = 5000)
+      val t0 = System.nanoTime()
+      assert(t.read(0, 1).toList === List("doc-1"))
+      val ms = (System.nanoTime() - t0) / 1000000
+      assert(ms < 2500, s"doc-1 returned after $ms ms")
+      // the buffered "doc-" travels with the parked connection
+      srv.send(("2" + NUL).getBytes("UTF-8"))
+      assert(t.read(1, 2).toList === List("doc-2"))
+      assert(srv.accepted.get() === 1)
+      t.close()
+    } finally srv.close()
+  }
+
   test("AvailableNow over HTTP resumes from checkpoint, one doc per batch") {
     // The reference's full consume loop: resume where the consumer left
     // off, one document at a time (transis_consumer.py:115-151), but with
