@@ -4,8 +4,8 @@ import org.apache.spark.sql.SparkSession
 
 /** Stable, unique cache key for a live SparkSession.
   *
-  * The memo caches (Tables.relationCache, ExtQueries/HistoryQueries memos,
-  * Memos.install) used to key on `System.identityHashCode(spark)`, which
+  * The session memos ([[graft.queries.SessionMemo]], Memos.install)
+  * used to key on `System.identityHashCode(spark)`, which
   * can collide between two live sessions or be recycled after GC — one
   * session could be served, or cross-evict, another session's cached
   * DataFrames. Classic sessions expose a UUID; anything else gets one

@@ -20,18 +20,15 @@ object Tables {
     * that rewrite a data dir mid-session must `evict(spark)` first.
     */
   private val relationCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
+    new graft.queries.SessionMemo[String, DataFrame](perIteration = false)(
+      (_, _, _) => ())
 
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    relationCache.computeIfAbsent(
-      s"${SessionKey(spark)}|$dir/$name.parquet",
-      _ => spark.read.parquet(s"$dir/$name.parquet"))
+    relationCache(spark, s"$dir/$name.parquet")(
+      spark.read.parquet(s"$dir/$name.parquet"))
 
   /** Drop cached relations belonging to `spark` (session teardown). */
-  def evict(spark: SparkSession): Unit = {
-    val prefix = s"${SessionKey(spark)}|"
-    relationCache.keySet.removeIf(_.startsWith(prefix))
-  }
+  def evict(spark: SparkSession): Unit = relationCache.evict(spark)
 
   def region(s: SparkSession, d: String): DataFrame    = table(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = table(s, d, "nation")

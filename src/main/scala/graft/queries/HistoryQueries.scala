@@ -16,12 +16,10 @@ object HistoryQueries {
 
   /** Build the typed lake once per session (parse + partitioned write),
     * memoized so h01–h04 share it within a gate run. */
-  private val lakeCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val lakeCache = lakeMemo[Unit]()
 
   private def lake(s: SparkSession): String =
-    lakeCache.computeIfAbsent(graft.SessionKey(s), _ => {
-      Memos.install(s)
+    lakeCache(s, ()) {
       val dir = java.nio.file.Files.createTempDirectory("graft-history").toString
       val monitors = TypedHistory.monitorTypes.map {
         case t @ "StrategicMonitor" =>
@@ -36,7 +34,7 @@ object HistoryQueries {
       TypedHistory.writeTopologyChanges(
         TypedHistory.topologyChangeRecords(s, Seq(topologyChangesDoc)), dir)
       dir
-    })
+    }
 
   private val TS = "collectionendtimestamp_plus_3_mins"
 
@@ -46,12 +44,10 @@ object HistoryQueries {
     * range read exercises enableManifests → publish → refreshStats →
     * footer-pruned planning end-to-end, and the VALUES oracle pins the
     * exact rows a correct prune must still return. */
-  private val manifestLakeCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val manifestLakeCache = lakeMemo[Unit]()
 
   private def manifestLake(s: SparkSession): String =
-    manifestLakeCache.computeIfAbsent(graft.SessionKey(s), _ => {
-      Memos.install(s)
+    manifestLakeCache(s, ()) {
       import s.implicits._
       val dir = java.nio.file.Files
         .createTempDirectory("graft-manifest-lake").toString + "/lake"
@@ -64,7 +60,7 @@ object HistoryQueries {
       graft.sources.History.enableManifests(s, dir): Unit
       graft.sources.History.refreshStats(s, dir, TS): Unit
       dir
-    })
+    }
 
   /** A single-level (lang-partitioned) manifest lake of the documents
     * table with a keyed copy-on-write delete already applied: h07 reads
@@ -73,12 +69,10 @@ object HistoryQueries {
     * → file-granular rewrite → atomic manifest flip end-to-end, against
     * a DuckDB anti-predicate oracle on the same parquet. Keyed by
     * (session, sfDir): the corpus differs per scale factor. */
-  private val deleteLakeCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
+  private val deleteLakeCache = lakeMemo[String]()
 
   private def deleteLake(s: SparkSession, sfDir: String): String =
-    deleteLakeCache.computeIfAbsent((graft.SessionKey(s), sfDir), _ => {
-      Memos.install(s)
+    deleteLakeCache(s, sfDir) {
       val dir = java.nio.file.Files
         .createTempDirectory("graft-cow-delete").toString + "/lake"
       graft.Tables.documents(s, sfDir)
@@ -88,7 +82,7 @@ object HistoryQueries {
       graft.sources.History.deleteWhere(s, dir,
         col("source") === "src3" || col("doc_id") % 11 === 0): Unit
       dir
-    })
+    }
 
   /** A lang-partitioned manifest lake of the documents table with a
     * keyed copy-on-write MERGE already applied: every src1 doc's
@@ -97,12 +91,10 @@ object HistoryQueries {
     * key-semi-join match scan → file-granular rewrite-with-upsert →
     * atomic flip end-to-end against a CASE/UNION oracle on the same
     * parquet. Keyed by (session, sfDir). */
-  private val mergeLakeCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
+  private val mergeLakeCache = lakeMemo[String]()
 
   private def mergeLake(s: SparkSession, sfDir: String): String =
-    mergeLakeCache.computeIfAbsent((graft.SessionKey(s), sfDir), _ => {
-      Memos.install(s)
+    mergeLakeCache(s, sfDir) {
       val dir = java.nio.file.Files
         .createTempDirectory("graft-cow-merge").toString + "/lake"
       val docs = graft.Tables.documents(s, sfDir)
@@ -115,7 +107,7 @@ object HistoryQueries {
       graft.sources.History.mergeInto(
         s, dir, corrections.unionByName(inserts), Seq("doc_id")): Unit
       dir
-    })
+    }
 
   /** An unpartitioned manifest lake of the documents table, landed as
     * key-scattered files then cluster-rewritten on doc_id: h09 range-
@@ -123,12 +115,10 @@ object HistoryQueries {
     * gate exercises scatter → clusterBy (range repartition + in-file
     * sort + flip + stats refresh) → footer-pruned range read end-to-end
     * against a BETWEEN oracle. Keyed by (session, sfDir). */
-  private val clusterLakeCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
+  private val clusterLakeCache = lakeMemo[String]()
 
   private def clusterLake(s: SparkSession, sfDir: String): String =
-    clusterLakeCache.computeIfAbsent((graft.SessionKey(s), sfDir), _ => {
-      Memos.install(s)
+    clusterLakeCache(s, sfDir) {
       val dir = java.nio.file.Files
         .createTempDirectory("graft-clustered").toString + "/lake"
       graft.Tables.documents(s, sfDir)
@@ -137,7 +127,7 @@ object HistoryQueries {
       graft.sources.History.enableManifests(s, dir): Unit
       graft.sources.History.clusterBy(s, dir, "doc_id", 8): Unit
       dir
-    })
+    }
 
   /** An unpartitioned manifest lake of the documents table,
     * Z-order-clustered on (doc_id, n_chars): h10 box-reads it through
@@ -146,12 +136,10 @@ object HistoryQueries {
     * stats refresh on BOTH columns) → per-dimension-intersected
     * footer-pruned read end-to-end against a two-predicate BETWEEN
     * oracle. Keyed by (session, sfDir). */
-  private val zLakeCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
+  private val zLakeCache = lakeMemo[String]()
 
   private def zLake(s: SparkSession, sfDir: String): String =
-    zLakeCache.computeIfAbsent((graft.SessionKey(s), sfDir), _ => {
-      Memos.install(s)
+    zLakeCache(s, sfDir) {
       val dir = java.nio.file.Files
         .createTempDirectory("graft-zorder").toString + "/lake"
       graft.Tables.documents(s, sfDir)
@@ -160,7 +148,7 @@ object HistoryQueries {
       graft.sources.History.clusterByZ(
         s, dir, Seq("doc_id", "n_chars"), 8): Unit
       dir
-    })
+    }
 
   /** A lang-partitioned documents lake on SHARDED manifests with a
     * one-partition copy-on-write delete already applied: h11 reads two
@@ -169,12 +157,10 @@ object HistoryQueries {
     * shard-reusing commit (only lang=en's shard is rewritten) →
     * shard-pruned driver-side planning end-to-end against a DuckDB
     * lang-subset anti-predicate oracle. Keyed by (session, sfDir). */
-  private val shardedLakeCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
+  private val shardedLakeCache = lakeMemo[String]()
 
   private def shardedLake(s: SparkSession, sfDir: String): String =
-    shardedLakeCache.computeIfAbsent((graft.SessionKey(s), sfDir), _ => {
-      Memos.install(s)
+    shardedLakeCache(s, sfDir) {
       val dir = java.nio.file.Files
         .createTempDirectory("graft-sharded-lake").toString + "/lake"
       graft.Tables.documents(s, sfDir)
@@ -185,7 +171,7 @@ object HistoryQueries {
       graft.sources.History.deleteWhere(s, dir,
         col("lang") === "en" && col("doc_id") % 7 === 0): Unit
       dir
-    })
+    }
 
   /** An UNCLUSTERED (round-robin-scattered) documents lake with the
     * per-file bloom key index built on doc_id: h13 point-looks-up a
@@ -195,12 +181,10 @@ object HistoryQueries {
     * planning end-to-end against a DuckDB IN-list oracle — the layout
     * where range stats CANNOT prune (every file spans the whole id
     * range) and only content pruning helps. Keyed by (session, sfDir). */
-  private val bloomLakeCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
+  private val bloomLakeCache = lakeMemo[String]()
 
   private def bloomLake(s: SparkSession, sfDir: String): String =
-    bloomLakeCache.computeIfAbsent((graft.SessionKey(s), sfDir), _ => {
-      Memos.install(s)
+    bloomLakeCache(s, sfDir) {
       val dir = java.nio.file.Files
         .createTempDirectory("graft-bloom-lake").toString + "/lake"
       graft.Tables.documents(s, sfDir)
@@ -213,7 +197,7 @@ object HistoryQueries {
       graft.sources.History.refreshKeyIndex(s, dir, "doc_id"): Unit
       graft.sources.History.refreshKeyIndex(s, dir, "doc_key"): Unit
       dir
-    })
+    }
 
   /** An unclustered manifest lake that took two MERGE-ON-READ deletes
     * ([[graft.sources.History.deleteKeysDV]] — bloom-pruned keyed
@@ -226,12 +210,10 @@ object HistoryQueries {
     * the row-level change feed across the takedown window — the
     * positional O(changed-vectors) delta path. Keyed by (session,
     * sfDir). */
-  private val dvLakeCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
+  private val dvLakeCache = lakeMemo[String]()
 
   private def dvLake(s: SparkSession, sfDir: String): String =
-    dvLakeCache.computeIfAbsent((graft.SessionKey(s), sfDir), _ => {
-      Memos.install(s)
+    dvLakeCache(s, sfDir) {
       val dir = java.nio.file.Files
         .createTempDirectory("graft-dv-lake").toString + "/lake"
       graft.Tables.documents(s, sfDir)
@@ -245,7 +227,7 @@ object HistoryQueries {
       graft.sources.History.deleteWhereDV(s, dir,
         col("doc_id") % 17 === 5): Unit
       dir
-    })
+    }
 
   /** A lang-partitioned lake landed as MANY SMALL FILES per partition
     * (the streaming-archive debt shape), with one merge-on-read delete
@@ -253,12 +235,10 @@ object HistoryQueries {
     * rewrites only the small-file dirs, folding the deletion vector
     * through. h22 reads the packed image — a pack that lost, doubled,
     * or resurrected a row fails the hash. Keyed by (session, sfDir). */
-  private val binPackLakeCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
+  private val binPackLakeCache = lakeMemo[String]()
 
   private def binPackLake(s: SparkSession, sfDir: String): String =
-    binPackLakeCache.computeIfAbsent((graft.SessionKey(s), sfDir), _ => {
-      Memos.install(s)
+    binPackLakeCache(s, sfDir) {
       val dir = java.nio.file.Files
         .createTempDirectory("graft-binpack-lake").toString + "/lake"
       graft.Tables.documents(s, sfDir)
@@ -271,7 +251,7 @@ object HistoryQueries {
       graft.sources.History.binPack(s, dir,
         targetBytes = 256L * 1024 * 1024, minFiles = 2): Unit
       dir
-    })
+    }
 
   /** A lang-partitioned manifest lake with ONE partition restated by
     * [[graft.sources.History.overwritePartitions]] — the backfill
@@ -279,12 +259,10 @@ object HistoryQueries {
     * 5000) in one atomic dynamic-partition-overwrite commit, the other
     * partitions untouched. h24 reads the post-backfill image. Keyed by
     * (session, sfDir). */
-  private val backfillLakeCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
+  private val backfillLakeCache = lakeMemo[String]()
 
   private def backfillLake(s: SparkSession, sfDir: String): String =
-    backfillLakeCache.computeIfAbsent((graft.SessionKey(s), sfDir), _ => {
-      Memos.install(s)
+    backfillLakeCache(s, sfDir) {
       val dir = java.nio.file.Files
         .createTempDirectory("graft-backfill-lake").toString + "/lake"
       val docs = graft.Tables.documents(s, sfDir)
@@ -298,7 +276,7 @@ object HistoryQueries {
           .withColumn("n_chars", col("n_chars") + 5000L),
         Seq("lang")): Unit
       dir
-    })
+    }
 
   /** A manifest lake carrying declared CHECK constraints
     * ([[graft.sources.Constraints]]): after `n_chars >= 0` and a
@@ -308,12 +286,10 @@ object HistoryQueries {
     * final image — if enforcement ever silently admitted the bad batch
     * (or bounced the good one) the per-lang counts shift and the hash
     * fails. Keyed by (session, sfDir). */
-  private val constraintsLakeCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
+  private val constraintsLakeCache = lakeMemo[String]()
 
   private def constraintsLake(s: SparkSession, sfDir: String): String =
-    constraintsLakeCache.computeIfAbsent((graft.SessionKey(s), sfDir), _ => {
-      Memos.install(s)
+    constraintsLakeCache(s, sfDir) {
       val dir = java.nio.file.Files
         .createTempDirectory("graft-constraints-lake").toString + "/lake"
       val docs = graft.Tables.documents(s, sfDir)
@@ -337,7 +313,7 @@ object HistoryQueries {
           .withColumn("doc_id", col("doc_id") + 1000000L),
         key = "good"): Unit
       dir
-    })
+    }
 
   /** A lang-partitioned manifest lake of the documents table built in
     * two schema ERAS: era 1 (even doc_ids) lands with n_chars as INT32
@@ -351,12 +327,10 @@ object HistoryQueries {
     * pinned read end-to-end against a DuckDB UNION oracle. Footer-merge
     * inference would FAIL this lake outright (INT32 vs INT64 footers).
     * Keyed by (session, sfDir). */
-  private val evolvedLakeCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
+  private val evolvedLakeCache = lakeMemo[String]()
 
   private def evolvedLake(s: SparkSession, sfDir: String): String =
-    evolvedLakeCache.computeIfAbsent((graft.SessionKey(s), sfDir), _ => {
-      Memos.install(s)
+    evolvedLakeCache(s, sfDir) {
       import org.apache.spark.sql.types._
       val dir = java.nio.file.Files
         .createTempDirectory("graft-evolved-lake").toString + "/lake"
@@ -381,7 +355,7 @@ object HistoryQueries {
             (col("n_chars").cast("double") / 100.0).as("quality")),
         key = "era2", partitionCols = Seq("lang")): Unit
       dir
-    })
+    }
 
   /** A manifest lake of the documents table with a SNAPSHOT TAG pinned
     * before a delete, then aggressively vacuumed (grace 0): every
@@ -393,12 +367,10 @@ object HistoryQueries {
     * end-to-end. The training-provenance contract: the corpus snapshot
     * a model trained on stays reproducible for the model's lifetime,
     * while untagged history ages out. Keyed by (session, sfDir). */
-  private val taggedLakeCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
+  private val taggedLakeCache = lakeMemo[String]()
 
   private def taggedLake(s: SparkSession, sfDir: String): String =
-    taggedLakeCache.computeIfAbsent((graft.SessionKey(s), sfDir), _ => {
-      Memos.install(s)
+    taggedLakeCache(s, sfDir) {
       val dir = java.nio.file.Files
         .createTempDirectory("graft-tagged-lake").toString + "/lake"
       graft.Tables.documents(s, sfDir)
@@ -410,7 +382,7 @@ object HistoryQueries {
         col("source") === "src2" || col("doc_id") % 5 === 0): Unit
       graft.sources.History.vacuum(s, dir, graceMs = 0L): Unit
       dir
-    })
+    }
 
   /** A manifest lake of the documents table that took a WRONG delete
     * (all of src1), was ROLLED BACK metadata-only
@@ -422,12 +394,10 @@ object HistoryQueries {
     * that leaked the undone delete's effect keeps too few rows) — the
     * undo/redo lifecycle end-to-end against an anti-predicate oracle.
     * Keyed by (session, sfDir). */
-  private val restoredLakeCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
+  private val restoredLakeCache = lakeMemo[String]()
 
   private def restoredLake(s: SparkSession, sfDir: String): String =
-    restoredLakeCache.computeIfAbsent((graft.SessionKey(s), sfDir), _ => {
-      Memos.install(s)
+    restoredLakeCache(s, sfDir) {
       val dir = java.nio.file.Files
         .createTempDirectory("graft-restored-lake").toString + "/lake"
       graft.Tables.documents(s, sfDir)
@@ -440,36 +410,24 @@ object HistoryQueries {
       graft.sources.History.deleteWhere(s, dir,
         col("doc_id") % 13 === 3): Unit // the intended delete
       dir
-    })
+    }
 
-  /** Drop the fixture lakes keyed to `s` and delete their temp dirs. */
-  private[queries] def evict(s: SparkSession): Unit = {
+  /** A fixture-lake memo, released at session teardown by deleting the
+    * lake's `graft-*` temp dir (or the lake dir itself when it does not
+    * sit directly under one). */
+  private def lakeMemo[K](): SessionMemo[K, String] =
+    new SessionMemo[K, String](perIteration = false)((_, _, dir) => rmLake(dir))
+
+  private def rmLake(dir: String): Unit = {
     def rm(f: java.io.File): Unit = {
       val kids = f.listFiles()
       if (kids != null) kids.foreach(rm)
       f.delete(): Unit
     }
-    def rmLake(dir: String): Unit =
-      if (dir != null) rm(new java.io.File(dir).getParentFile match {
-        case p if p != null && p.getName.startsWith("graft-") => p
-        case _ => new java.io.File(dir)
-      })
-    Seq(lakeCache, manifestLakeCache).foreach { cache =>
-      rmLake(cache.remove(graft.SessionKey(s)))
-    }
-    val sk = graft.SessionKey(s)
-    Seq(deleteLakeCache, mergeLakeCache, clusterLakeCache, zLakeCache,
-        shardedLakeCache, bloomLakeCache, evolvedLakeCache,
-        taggedLakeCache, restoredLakeCache, rollupCache, dvLakeCache,
-        binPackLakeCache, exportCache, backfillLakeCache,
-        constraintsLakeCache, joinViewCache, sqlInsertLakeCache,
-        sqlDeleteLakeCache, sqlUpdateLakeCache, sqlMergeLakeCache,
-        sqlMoveLakeCache, sqlOverwriteLakeCache)
-      .foreach { cache =>
-      cache.keySet.forEach { k =>
-        if (k._1 == sk) rmLake(cache.remove(k))
-      }
-    }
+    rm(new java.io.File(dir).getParentFile match {
+      case p if p != null && p.getName.startsWith("graft-") => p
+      case _ => new java.io.File(dir)
+    })
   }
 
   /** h26's MAINTAINED JOIN VIEW ([[graft.ext.JoinView]]): facts
@@ -480,12 +438,10 @@ object HistoryQueries {
     * +100,000,000) — and ONE tick mirrors the window by recomputing
     * only the touched keys (bloom-pruned reads on all three lakes).
     * Keyed by (session, sfDir). */
-  private val joinViewCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
+  private val joinViewCache = lakeMemo[String]()
 
   private def joinViewRoot(s: SparkSession, sfDir: String): String =
-    joinViewCache.computeIfAbsent((graft.SessionKey(s), sfDir), _ => {
-      Memos.install(s)
+    joinViewCache(s, sfDir) {
       val base = java.nio.file.Files
         .createTempDirectory("graft-jv").toString
       val a = s"$base/facts"
@@ -516,7 +472,7 @@ object HistoryQueries {
         key = "h26-batch"): Unit
       graft.ext.JoinView.tick(s, a, b, view, "custkey"): Unit
       view
-    })
+    }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // S5: the three typed getFromDate shortcuts, date-bounded — each is a
@@ -713,9 +669,8 @@ object HistoryQueries {
     // change-rate cost instead of rescan cost.
     "h19_incremental_rollup" -> ((s, d) => {
       val lakeDir = mergeLake(s, d)
-      val rollupDir = rollupCache.computeIfAbsent(
-        (graft.SessionKey(s), lakeDir), _ => java.nio.file.Files
-          .createTempDirectory("graft-rollup").toString + "/rollup")
+      val rollupDir = rollupCache(s, lakeDir)(java.nio.file.Files
+        .createTempDirectory("graft-rollup").toString + "/rollup")
       val vs = graft.sources.History.versions(s, lakeDir)
       graft.sources.IncrementalRollup.bootstrap(s, lakeDir, rollupDir,
         Seq("lang"), "n_chars", atVersion = Some(vs.head)): Unit
@@ -759,13 +714,12 @@ object HistoryQueries {
     // ship-this-exact-training-corpus operation, gated at SF scale.
     "h23_exported_snapshot" -> ((s, d) => {
       val src = dvLake(s, d)
-      val dst = exportCache.computeIfAbsent(
-        (graft.SessionKey(s), src), _ => {
-          val out = java.nio.file.Files
-            .createTempDirectory("graft-export-lake").toString + "/lake"
-          graft.sources.History.exportSnapshot(s, src, out): Unit
-          out
-        })
+      val dst = exportCache(s, src) {
+        val out = java.nio.file.Files
+          .createTempDirectory("graft-export-lake").toString + "/lake"
+        graft.sources.History.exportSnapshot(s, src, out): Unit
+        out
+      }
       graft.sources.History.readPinned(s, dst)
         .select(col("doc_id"), col("lang"), col("source"), col("n_chars"))
     }),
@@ -1411,12 +1365,10 @@ object HistoryQueries {
     * constraint is declared, a violating SQL INSERT ('xx' lang) must
     * bounce WHOLE at the staged-append edge, then the odd half lands
     * via SQL INSERT. Keyed by (session, sfDir). */
-  private val sqlInsertLakeCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
+  private val sqlInsertLakeCache = lakeMemo[String]()
 
   private def sqlInsertLake(s: SparkSession, sfDir: String): String =
-    sqlInsertLakeCache.computeIfAbsent((graft.SessionKey(s), sfDir), _ => {
-      Memos.install(s)
+    sqlInsertLakeCache(s, sfDir) {
       s.conf.set("spark.sql.catalog.lake",
         classOf[graft.sources.LakeCatalog].getName)
       val dir = java.nio.file.Files
@@ -1440,7 +1392,7 @@ object HistoryQueries {
       s.sql(s"""INSERT INTO lake.`$dir`
                 SELECT doc_id, lang, source, n_chars FROM h28_src"""): Unit
       dir
-    })
+    }
 
   /** h34's lake: the corpus lands through the engine write path, then
     * two SQL DELETE statements take rows down — the first resolves the
@@ -1449,12 +1401,10 @@ object HistoryQueries {
     * vectors (`DeletionVectorSpec`/`LakeCatalogSpec` assert the
     * no-rewrite property; this gate asserts the ROW SET at SF scale).
     * Keyed by (session, sfDir). */
-  private val sqlDeleteLakeCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
+  private val sqlDeleteLakeCache = lakeMemo[String]()
 
   private def sqlDeleteLake(s: SparkSession, sfDir: String): String =
-    sqlDeleteLakeCache.computeIfAbsent((graft.SessionKey(s), sfDir), _ => {
-      Memos.install(s)
+    sqlDeleteLakeCache(s, sfDir) {
       s.conf.set("spark.sql.catalog.lake",
         classOf[graft.sources.LakeCatalog].getName)
       val dir = java.nio.file.Files
@@ -1468,7 +1418,7 @@ object HistoryQueries {
       s.sql(s"""DELETE FROM lake.`$dir`
                 WHERE lang = 'en' AND doc_id <= 500"""): Unit
       dir
-    })
+    }
 
   /** h35's lake: corpus through the engine write path, then UPDATE →
     * DV DELETE → UPDATE through SQL — the first update resolves the
@@ -1476,12 +1426,10 @@ object HistoryQueries {
     * table, and the second's condition is deliberately
     * filter-inexpressible (modulo) to pin the by-name expression
     * re-anchoring. Keyed by (session, sfDir). */
-  private val sqlUpdateLakeCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
+  private val sqlUpdateLakeCache = lakeMemo[String]()
 
   private def sqlUpdateLake(s: SparkSession, sfDir: String): String =
-    sqlUpdateLakeCache.computeIfAbsent((graft.SessionKey(s), sfDir), _ => {
-      Memos.install(s)
+    sqlUpdateLakeCache(s, sfDir) {
       s.conf.set("spark.sql.catalog.lake",
         classOf[graft.sources.LakeCatalog].getName)
       val dir = java.nio.file.Files
@@ -1497,18 +1445,16 @@ object HistoryQueries {
       s.sql(s"""UPDATE lake.`$dir` SET source = concat('r:', source)
                 WHERE doc_id % 13 = 4"""): Unit
       dir
-    })
+    }
 
   /** h36's lake: corpus through the engine write path, then one SQL
     * MERGE whose source mixes corrections (existing keys, new images)
     * with inserts (offset keys) — derived from the same documents
     * table so the DuckDB oracle can rebuild the exact image. */
-  private val sqlMergeLakeCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
+  private val sqlMergeLakeCache = lakeMemo[String]()
 
   private def sqlMergeLake(s: SparkSession, sfDir: String): String =
-    sqlMergeLakeCache.computeIfAbsent((graft.SessionKey(s), sfDir), _ => {
-      Memos.install(s)
+    sqlMergeLakeCache(s, sfDir) {
       s.conf.set("spark.sql.catalog.lake",
         classOf[graft.sources.LakeCatalog].getName)
       val dir = java.nio.file.Files
@@ -1529,18 +1475,16 @@ object HistoryQueries {
                 WHEN MATCHED THEN UPDATE SET *
                 WHEN NOT MATCHED THEN INSERT *"""): Unit
       dir
-    })
+    }
 
   /** h37's lake: documents PARTITIONED BY lang through the engine
     * write path, then one SQL UPDATE that moves a whole language plus
     * a modular id-slice into a fresh partition value. Keyed by
     * (session, sfDir). */
-  private val sqlMoveLakeCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
+  private val sqlMoveLakeCache = lakeMemo[String]()
 
   private def sqlMoveLake(s: SparkSession, sfDir: String): String =
-    sqlMoveLakeCache.computeIfAbsent((graft.SessionKey(s), sfDir), _ => {
-      Memos.install(s)
+    sqlMoveLakeCache(s, sfDir) {
       s.conf.set("spark.sql.catalog.lake",
         classOf[graft.sources.LakeCatalog].getName)
       val dir = java.nio.file.Files
@@ -1553,17 +1497,15 @@ object HistoryQueries {
       s.sql(s"""UPDATE lake.`$dir` SET lang = 'yy'
                 WHERE lang = 'fr' OR doc_id % 31 = 7"""): Unit
       dir
-    })
+    }
 
   /** h39's lake: the full corpus lands through the engine write path,
     * then one SQL INSERT OVERWRITE restates it to the filtered,
     * transformed image in one atomic flip. */
-  private val sqlOverwriteLakeCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
+  private val sqlOverwriteLakeCache = lakeMemo[String]()
 
   private def sqlOverwriteLake(s: SparkSession, sfDir: String): String =
-    sqlOverwriteLakeCache.computeIfAbsent((graft.SessionKey(s), sfDir), _ => {
-      Memos.install(s)
+    sqlOverwriteLakeCache(s, sfDir) {
       s.conf.set("spark.sql.catalog.lake",
         classOf[graft.sources.LakeCatalog].getName)
       val dir = java.nio.file.Files
@@ -1578,18 +1520,16 @@ object HistoryQueries {
                 FROM parquet.`$sfDir/documents.parquet`
                 WHERE lang = 'en'"""): Unit
       dir
-    })
+    }
 
   /** h40's lake: documents PARTITIONED BY lang through the engine
     * write path, then one SQL static-partition INSERT OVERWRITE
     * restates lang=en to its filtered, transformed image — every
     * other partition untouched. */
-  private val sqlPartOvwLakeCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
+  private val sqlPartOvwLakeCache = lakeMemo[String]()
 
   private def sqlPartOvwLake(s: SparkSession, sfDir: String): String =
-    sqlPartOvwLakeCache.computeIfAbsent((graft.SessionKey(s), sfDir), _ => {
-      Memos.install(s)
+    sqlPartOvwLakeCache(s, sfDir) {
       s.conf.set("spark.sql.catalog.lake",
         classOf[graft.sources.LakeCatalog].getName)
       val dir = java.nio.file.Files
@@ -1606,18 +1546,16 @@ object HistoryQueries {
                 FROM parquet.`$sfDir/documents.parquet`
                 WHERE lang = 'en' AND doc_id % 2 = 0"""): Unit
       dir
-    })
+    }
 
   /** h51's lake: documents PARTITIONED BY lang through the engine
     * write path, then one DYNAMIC-mode SQL INSERT OVERWRITE whose
     * query produces rows for en and zh only — exactly those two
     * partitions restate, the rest survive untouched. */
-  private val sqlDynOvwLakeCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
+  private val sqlDynOvwLakeCache = lakeMemo[String]()
 
   private def sqlDynOvwLake(s: SparkSession, sfDir: String): String =
-    sqlDynOvwLakeCache.computeIfAbsent((graft.SessionKey(s), sfDir), _ => {
-      Memos.install(s)
+    sqlDynOvwLakeCache(s, sfDir) {
       s.conf.set("spark.sql.catalog.lake",
         classOf[graft.sources.LakeCatalog].getName)
       val dir = java.nio.file.Files
@@ -1641,18 +1579,16 @@ object HistoryQueries {
           s.conf.unset("spark.sql.sources.partitionOverwriteMode")
       }
       dir
-    })
+    }
 
   /** h52's lake: corpus through the engine write path (physical
     * column `source`), declared, then SQL RENAME COLUMN source→origin
     * (metadata-only), an era-2 INSERT under the new name, and a DV
     * DELETE filtering on the renamed column. */
-  private val sqlRenameLakeCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
+  private val sqlRenameLakeCache = lakeMemo[String]()
 
   private def sqlRenameLake(s: SparkSession, sfDir: String): String =
-    sqlRenameLakeCache.computeIfAbsent((graft.SessionKey(s), sfDir), _ => {
-      Memos.install(s)
+    sqlRenameLakeCache(s, sfDir) {
       s.conf.set("spark.sql.catalog.lake",
         classOf[graft.sources.LakeCatalog].getName)
       val dir = java.nio.file.Files
@@ -1671,17 +1607,15 @@ object HistoryQueries {
       s.sql(s"""DELETE FROM lake.`$dir`
                 WHERE origin = 'era2' AND doc_id % 2 = 0"""): Unit
       dir
-    })
+    }
 
   /** h41's lake: corpus through the engine write path, then one SQL
     * `MERGE … WHEN MATCHED THEN DELETE` applies a key feed mixing
     * existing keys (doc_id % 9 = 2) with absent ones (offset block). */
-  private val sqlMergeDelLakeCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
+  private val sqlMergeDelLakeCache = lakeMemo[String]()
 
   private def sqlMergeDelLake(s: SparkSession, sfDir: String): String =
-    sqlMergeDelLakeCache.computeIfAbsent((graft.SessionKey(s), sfDir), _ => {
-      Memos.install(s)
+    sqlMergeDelLakeCache(s, sfDir) {
       s.conf.set("spark.sql.catalog.lake",
         classOf[graft.sources.LakeCatalog].getName)
       val dir = java.nio.file.Files
@@ -1698,19 +1632,17 @@ object HistoryQueries {
                 ON t.doc_id = s.doc_id
                 WHEN MATCHED THEN DELETE"""): Unit
       dir
-    })
+    }
 
   /** h42's lake: corpus through the engine write path, then ONE SQL
     * MERGE replays a four-arm CDC batch (matched deletes, matched
     * updates, unmatched inserts, unmatched tombstones) — all derived
     * from the documents table so the DuckDB oracle rebuilds the exact
     * image. */
-  private val sqlMergeCdcLakeCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
+  private val sqlMergeCdcLakeCache = lakeMemo[String]()
 
   private def sqlMergeCdcLake(s: SparkSession, sfDir: String): String =
-    sqlMergeCdcLakeCache.computeIfAbsent((graft.SessionKey(s), sfDir), _ => {
-      Memos.install(s)
+    sqlMergeCdcLakeCache(s, sfDir) {
       s.conf.set("spark.sql.catalog.lake",
         classOf[graft.sources.LakeCatalog].getName)
       val dir = java.nio.file.Files
@@ -1742,7 +1674,7 @@ object HistoryQueries {
                 WHEN MATCHED THEN UPDATE SET *
                 WHEN NOT MATCHED AND s.op != 'D' THEN INSERT *"""): Unit
       dir
-    })
+    }
 
   /** h50's lake: corpus through the engine write path, then ONE SQL
     * MERGE replays a column-subset CDC batch — op='N' rows reset only
@@ -1751,55 +1683,50 @@ object HistoryQueries {
     * column list (lang unassigned → NULL). Arms are key-disjoint
     * (modular classes), feeds derived from documents so the DuckDB
     * oracle rebuilds the exact image. */
-  private val sqlMergePartialLakeCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
+  private val sqlMergePartialLakeCache = lakeMemo[String]()
 
   private def sqlMergePartialLake(s: SparkSession, sfDir: String): String =
-    sqlMergePartialLakeCache.computeIfAbsent((graft.SessionKey(s), sfDir),
-      _ => {
-        Memos.install(s)
-        s.conf.set("spark.sql.catalog.lake",
-          classOf[graft.sources.LakeCatalog].getName)
-        val dir = java.nio.file.Files
-          .createTempDirectory("graft-sql-mgpart").toString + "/lake"
-        val docs = graft.Tables.documents(s, sfDir)
-          .select(col("doc_id"), col("lang"), col("source"), col("n_chars"))
-        docs.repartition(8).write.parquet(dir)
-        graft.sources.History.enableManifests(s, dir): Unit
-        // the feed's columns deliberately do NOT mirror the target
-        // image (n2/src2/op) — partial SET lists take expressions over
-        // whatever the feed carries
-        docs.filter(col("doc_id") % 11 === 5)
-          .select(col("doc_id"), (col("n_chars") * 2).as("n2"),
-            col("source").as("src2"), lit("N").as("op"))
-          .unionByName(docs.filter(col("doc_id") % 11 === 7)
-            .select(col("doc_id"), col("n_chars").as("n2"),
-              col("source").as("src2"), lit("S").as("op")))
-          .unionByName(docs.filter(col("doc_id") < 35)
-            .select((col("doc_id") + 60000000L).as("doc_id"),
-              col("n_chars").as("n2"), col("source").as("src2"),
-              lit("N").as("op")))
-          .createOrReplaceTempView("h50_cdc_src")
-        s.sql(s"""MERGE INTO lake.`$dir` t USING h50_cdc_src s
-                  ON t.doc_id = s.doc_id
-                  WHEN MATCHED AND s.op = 'N'
-                    THEN UPDATE SET n_chars = s.n2 + 5
-                  WHEN MATCHED AND s.op = 'S'
-                    THEN UPDATE SET source = concat('p:', s.src2)
-                  WHEN NOT MATCHED THEN INSERT (doc_id, source, n_chars)
-                    VALUES (s.doc_id, 'ins', s.n2)"""): Unit
-        dir
-      })
+    sqlMergePartialLakeCache(s, sfDir) {
+      s.conf.set("spark.sql.catalog.lake",
+        classOf[graft.sources.LakeCatalog].getName)
+      val dir = java.nio.file.Files
+        .createTempDirectory("graft-sql-mgpart").toString + "/lake"
+      val docs = graft.Tables.documents(s, sfDir)
+        .select(col("doc_id"), col("lang"), col("source"), col("n_chars"))
+      docs.repartition(8).write.parquet(dir)
+      graft.sources.History.enableManifests(s, dir): Unit
+      // the feed's columns deliberately do NOT mirror the target
+      // image (n2/src2/op) — partial SET lists take expressions over
+      // whatever the feed carries
+      docs.filter(col("doc_id") % 11 === 5)
+        .select(col("doc_id"), (col("n_chars") * 2).as("n2"),
+          col("source").as("src2"), lit("N").as("op"))
+        .unionByName(docs.filter(col("doc_id") % 11 === 7)
+          .select(col("doc_id"), col("n_chars").as("n2"),
+            col("source").as("src2"), lit("S").as("op")))
+        .unionByName(docs.filter(col("doc_id") < 35)
+          .select((col("doc_id") + 60000000L).as("doc_id"),
+            col("n_chars").as("n2"), col("source").as("src2"),
+            lit("N").as("op")))
+        .createOrReplaceTempView("h50_cdc_src")
+      s.sql(s"""MERGE INTO lake.`$dir` t USING h50_cdc_src s
+                ON t.doc_id = s.doc_id
+                WHEN MATCHED AND s.op = 'N'
+                  THEN UPDATE SET n_chars = s.n2 + 5
+                WHEN MATCHED AND s.op = 'S'
+                  THEN UPDATE SET source = concat('p:', s.src2)
+                WHEN NOT MATCHED THEN INSERT (doc_id, source, n_chars)
+                  VALUES (s.doc_id, 'ins', s.n2)"""): Unit
+      dir
+    }
 
   /** h43's lake: built with ZERO Scala — CTAS (partitioned, CHECK
     * constraint via TBLPROPERTIES) over the evens with a transform,
     * then a plain INSERT lands the odds. */
-  private val sqlDdlLakeCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
+  private val sqlDdlLakeCache = lakeMemo[String]()
 
   private def sqlDdlLake(s: SparkSession, sfDir: String): String =
-    sqlDdlLakeCache.computeIfAbsent((graft.SessionKey(s), sfDir), _ => {
-      Memos.install(s)
+    sqlDdlLakeCache(s, sfDir) {
       s.conf.set("spark.sql.catalog.lake",
         classOf[graft.sources.LakeCatalog].getName)
       val dir = java.nio.file.Files
@@ -1816,130 +1743,116 @@ object HistoryQueries {
                 FROM parquet.`$sfDir/documents.parquet`
                 WHERE doc_id % 2 = 1"""): Unit
       dir
-    })
+    }
 
   /** h44's lake: corpus through the engine write path, then one
     * IN-subquery DELETE (quality-flagged short docs) and one
     * IN-subquery UPDATE (zh docs' source prefixed) — both
     * materialized to keyed routes. */
-  private val sqlInSubqueryLakeCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
+  private val sqlInSubqueryLakeCache = lakeMemo[String]()
 
   private def sqlInSubqueryLake(s: SparkSession, sfDir: String): String =
-    sqlInSubqueryLakeCache.computeIfAbsent((graft.SessionKey(s), sfDir),
-      _ => {
-        Memos.install(s)
-        s.conf.set("spark.sql.catalog.lake",
-          classOf[graft.sources.LakeCatalog].getName)
-        val dir = java.nio.file.Files
-          .createTempDirectory("graft-sql-insub").toString + "/lake"
-        graft.Tables.documents(s, sfDir)
-          .select(col("doc_id"), col("lang"), col("source"),
-            col("n_chars"))
-          .repartition(8)
-          .write.parquet(dir)
-        graft.sources.History.enableManifests(s, dir): Unit
-        s.sql(s"""DELETE FROM lake.`$dir`
-                  WHERE doc_id IN (
-                    SELECT doc_id
-                    FROM parquet.`$sfDir/documents.parquet`
-                    WHERE n_chars < 120)"""): Unit
-        s.sql(s"""UPDATE lake.`$dir`
-                  SET source = concat('q:', source)
-                  WHERE doc_id IN (
-                    SELECT doc_id
-                    FROM parquet.`$sfDir/documents.parquet`
-                    WHERE lang = 'zh')"""): Unit
-        dir
-      })
+    sqlInSubqueryLakeCache(s, sfDir) {
+      s.conf.set("spark.sql.catalog.lake",
+        classOf[graft.sources.LakeCatalog].getName)
+      val dir = java.nio.file.Files
+        .createTempDirectory("graft-sql-insub").toString + "/lake"
+      graft.Tables.documents(s, sfDir)
+        .select(col("doc_id"), col("lang"), col("source"),
+          col("n_chars"))
+        .repartition(8)
+        .write.parquet(dir)
+      graft.sources.History.enableManifests(s, dir): Unit
+      s.sql(s"""DELETE FROM lake.`$dir`
+                WHERE doc_id IN (
+                  SELECT doc_id
+                  FROM parquet.`$sfDir/documents.parquet`
+                  WHERE n_chars < 120)"""): Unit
+      s.sql(s"""UPDATE lake.`$dir`
+                SET source = concat('q:', source)
+                WHERE doc_id IN (
+                  SELECT doc_id
+                  FROM parquet.`$sfDir/documents.parquet`
+                  WHERE lang = 'zh')"""): Unit
+      dir
+    }
 
   /** h45's lake: documents with a derived DATE column, stats
     * refreshed for the date and string columns plus row counts — the
     * typed metadata-extrema serve state. */
-  private val sqlMetaExtremaLakeCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
+  private val sqlMetaExtremaLakeCache = lakeMemo[String]()
 
   private def sqlMetaExtremaLake(s: SparkSession, sfDir: String): String =
-    sqlMetaExtremaLakeCache.computeIfAbsent((graft.SessionKey(s), sfDir),
-      _ => {
-        Memos.install(s)
-        s.conf.set("spark.sql.catalog.lake",
-          classOf[graft.sources.LakeCatalog].getName)
-        val dir = java.nio.file.Files
-          .createTempDirectory("graft-sql-extrema").toString + "/lake"
-        graft.Tables.documents(s, sfDir)
-          .select(col("doc_id"), col("source"),
-            date_add(lit("2020-01-01").cast("date"),
-              (col("doc_id") % 365).cast("int")).as("dt"))
-          .repartition(4)
-          .write.parquet(dir)
-        graft.sources.History.enableManifests(s, dir): Unit
-        graft.sources.History.refreshStats(s, dir, "dt"): Unit
-        graft.sources.History.refreshStats(s, dir, "source"): Unit
-        graft.sources.History.refreshRowCounts(s, dir): Unit
-        dir
-      })
+    sqlMetaExtremaLakeCache(s, sfDir) {
+      s.conf.set("spark.sql.catalog.lake",
+        classOf[graft.sources.LakeCatalog].getName)
+      val dir = java.nio.file.Files
+        .createTempDirectory("graft-sql-extrema").toString + "/lake"
+      graft.Tables.documents(s, sfDir)
+        .select(col("doc_id"), col("source"),
+          date_add(lit("2020-01-01").cast("date"),
+            (col("doc_id") % 365).cast("int")).as("dt"))
+        .repartition(4)
+        .write.parquet(dir)
+      graft.sources.History.enableManifests(s, dir): Unit
+      graft.sources.History.refreshStats(s, dir, "dt"): Unit
+      graft.sources.History.refreshStats(s, dir, "source"): Unit
+      graft.sources.History.refreshRowCounts(s, dir): Unit
+      dir
+    }
 
   /** h53's lake: a DOUBLE score column (strictly positive, exact
     * binary fractions so Spark and DuckDB agree bit-for-bit) with
     * refreshed footer stats — the DOUBLE metadata-extrema surface. */
-  private val sqlDblExtremaLakeCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
+  private val sqlDblExtremaLakeCache = lakeMemo[String]()
 
   private def sqlDblExtremaLake(s: SparkSession, sfDir: String): String =
-    sqlDblExtremaLakeCache.computeIfAbsent((graft.SessionKey(s), sfDir),
-      _ => {
-        Memos.install(s)
-        s.conf.set("spark.sql.catalog.lake",
-          classOf[graft.sources.LakeCatalog].getName)
-        val dir = java.nio.file.Files
-          .createTempDirectory("graft-sql-dblext").toString + "/lake"
-        graft.Tables.documents(s, sfDir)
-          .select(col("doc_id"),
-            (lit(1000.25) + col("doc_id") * lit(0.5)).as("score"))
-          .repartition(4)
-          .write.parquet(dir)
-        graft.sources.History.enableManifests(s, dir): Unit
-        graft.sources.History.refreshStats(s, dir, "score"): Unit
-        graft.sources.History.refreshRowCounts(s, dir): Unit
-        dir
-      })
+    sqlDblExtremaLakeCache(s, sfDir) {
+      s.conf.set("spark.sql.catalog.lake",
+        classOf[graft.sources.LakeCatalog].getName)
+      val dir = java.nio.file.Files
+        .createTempDirectory("graft-sql-dblext").toString + "/lake"
+      graft.Tables.documents(s, sfDir)
+        .select(col("doc_id"),
+          (lit(1000.25) + col("doc_id") * lit(0.5)).as("score"))
+        .repartition(4)
+        .write.parquet(dir)
+      graft.sources.History.enableManifests(s, dir): Unit
+      graft.sources.History.refreshStats(s, dir, "score"): Unit
+      graft.sources.History.refreshRowCounts(s, dir): Unit
+      dir
+    }
 
   /** h55's lake: an INT64-backed DECIMAL(12,2) amount column (exact
     * quarter offsets, so Spark and DuckDB agree bit-for-bit through
     * the DOUBLE bridge) with refreshed footer stats. */
-  private val sqlDecExtremaLakeCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
+  private val sqlDecExtremaLakeCache = lakeMemo[String]()
 
   private def sqlDecExtremaLake(s: SparkSession, sfDir: String): String =
-    sqlDecExtremaLakeCache.computeIfAbsent((graft.SessionKey(s), sfDir),
-      _ => {
-        Memos.install(s)
-        s.conf.set("spark.sql.catalog.lake",
-          classOf[graft.sources.LakeCatalog].getName)
-        val dir = java.nio.file.Files
-          .createTempDirectory("graft-sql-decext").toString + "/lake"
-        graft.Tables.documents(s, sfDir)
-          .select(col("doc_id"),
-            (col("doc_id").cast("decimal(12,2)") + lit(0.25))
-              .cast("decimal(12,2)").as("amount"))
-          .repartition(4)
-          .write.parquet(dir)
-        graft.sources.History.enableManifests(s, dir): Unit
-        graft.sources.History.refreshStats(s, dir, "amount"): Unit
-        graft.sources.History.refreshRowCounts(s, dir): Unit
-        dir
-      })
+    sqlDecExtremaLakeCache(s, sfDir) {
+      s.conf.set("spark.sql.catalog.lake",
+        classOf[graft.sources.LakeCatalog].getName)
+      val dir = java.nio.file.Files
+        .createTempDirectory("graft-sql-decext").toString + "/lake"
+      graft.Tables.documents(s, sfDir)
+        .select(col("doc_id"),
+          (col("doc_id").cast("decimal(12,2)") + lit(0.25))
+            .cast("decimal(12,2)").as("amount"))
+        .repartition(4)
+        .write.parquet(dir)
+      graft.sources.History.enableManifests(s, dir): Unit
+      graft.sources.History.refreshStats(s, dir, "amount"): Unit
+      graft.sources.History.refreshRowCounts(s, dir): Unit
+      dir
+    }
 
   /** h54's lake: corpus with `source` physically present, declared,
     * then SQL DROP COLUMN source (metadata-only tombstoned drop) and
     * an era-2 INSERT without the column. */
-  private val sqlDropColLakeCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
+  private val sqlDropColLakeCache = lakeMemo[String]()
 
   private def sqlDropColLake(s: SparkSession, sfDir: String): String =
-    sqlDropColLakeCache.computeIfAbsent((graft.SessionKey(s), sfDir), _ => {
-      Memos.install(s)
+    sqlDropColLakeCache(s, sfDir) {
       s.conf.set("spark.sql.catalog.lake",
         classOf[graft.sources.LakeCatalog].getName)
       val dir = java.nio.file.Files
@@ -1956,7 +1869,7 @@ object HistoryQueries {
                 FROM parquet.`$sfDir/documents.parquet`
                 WHERE doc_id < 25"""): Unit
       dir
-    })
+    }
 
   /** h61's lake: corpus with `source` declared, an era-1 INSERT
     * committed UNDER that declaration (the pre-drop manifest the gate
@@ -1964,448 +1877,408 @@ object HistoryQueries {
     * DROP COLUMN source and an era-2 INSERT without it. Returns
     * (dir, pre-drop manifest version). */
   private val sqlSchemaAsofLakeCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String),
-      (String, Long)]()
+    new SessionMemo[String, (String, Long)](perIteration = false)(
+      (_, _, lake) => rmLake(lake._1))
 
   private def sqlSchemaAsofLake(s: SparkSession,
                                 sfDir: String): (String, Long) =
-    sqlSchemaAsofLakeCache.computeIfAbsent((graft.SessionKey(s), sfDir),
-      _ => {
-        Memos.install(s)
-        s.conf.set("spark.sql.catalog.lake",
-          classOf[graft.sources.LakeCatalog].getName)
-        val dir = java.nio.file.Files
-          .createTempDirectory("graft-sql-asof").toString + "/lake"
-        graft.Tables.documents(s, sfDir)
-          .select(col("doc_id"), col("lang"), col("source"),
-            col("n_chars"))
-          .repartition(8)
-          .write.parquet(dir)
-        graft.sources.History.enableManifests(s, dir): Unit
-        graft.sources.SchemaLog.declare(s, dir): Unit
-        s.sql(s"""INSERT INTO lake.`$dir`
-                  SELECT doc_id + 83000000, lang, source, n_chars
-                  FROM parquet.`$sfDir/documents.parquet`
-                  WHERE doc_id < 20"""): Unit
-        val vPre = graft.sources.History.versions(s, dir).last
-        s.sql(s"ALTER TABLE lake.`$dir` DROP COLUMN source"): Unit
-        s.sql(s"""INSERT INTO lake.`$dir`
-                  SELECT doc_id + 84000000, lang, n_chars
-                  FROM parquet.`$sfDir/documents.parquet`
-                  WHERE doc_id < 10"""): Unit
-        (dir, vPre)
-      })
+    sqlSchemaAsofLakeCache(s, sfDir) {
+      s.conf.set("spark.sql.catalog.lake",
+        classOf[graft.sources.LakeCatalog].getName)
+      val dir = java.nio.file.Files
+        .createTempDirectory("graft-sql-asof").toString + "/lake"
+      graft.Tables.documents(s, sfDir)
+        .select(col("doc_id"), col("lang"), col("source"),
+          col("n_chars"))
+        .repartition(8)
+        .write.parquet(dir)
+      graft.sources.History.enableManifests(s, dir): Unit
+      graft.sources.SchemaLog.declare(s, dir): Unit
+      s.sql(s"""INSERT INTO lake.`$dir`
+                SELECT doc_id + 83000000, lang, source, n_chars
+                FROM parquet.`$sfDir/documents.parquet`
+                WHERE doc_id < 20"""): Unit
+      val vPre = graft.sources.History.versions(s, dir).last
+      s.sql(s"ALTER TABLE lake.`$dir` DROP COLUMN source"): Unit
+      s.sql(s"""INSERT INTO lake.`$dir`
+                SELECT doc_id + 84000000, lang, n_chars
+                FROM parquet.`$sfDir/documents.parquet`
+                WHERE doc_id < 10"""): Unit
+      (dir, vPre)
+    }
 
   /** h46's lake: corpus through the engine write path, then one
     * full-sync SQL MERGE (upsert pair + NOT MATCHED BY SOURCE DELETE)
     * whose source is a transformed corpus subset — the lake must end
     * exactly as the source image. */
-  private val sqlMergeSyncLakeCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
+  private val sqlMergeSyncLakeCache = lakeMemo[String]()
 
   private def sqlMergeSyncLake(s: SparkSession, sfDir: String): String =
-    sqlMergeSyncLakeCache.computeIfAbsent((graft.SessionKey(s), sfDir),
-      _ => {
-        Memos.install(s)
-        s.conf.set("spark.sql.catalog.lake",
-          classOf[graft.sources.LakeCatalog].getName)
-        val dir = java.nio.file.Files
-          .createTempDirectory("graft-sql-sync").toString + "/lake"
-        val docs = graft.Tables.documents(s, sfDir)
-          .select(col("doc_id"), col("lang"), col("source"),
-            col("n_chars"))
-        docs.repartition(8).write.parquet(dir)
-        graft.sources.History.enableManifests(s, dir): Unit
-        docs.filter(col("doc_id") % 3 === 0)
-          .withColumn("n_chars", col("n_chars") + 50L)
-          .unionByName(docs.filter(col("doc_id") < 25)
-            .withColumn("doc_id", col("doc_id") + 40000000L)
-            .withColumn("source", lit("sync")))
-          .createOrReplaceTempView("h46_sync_src")
-        s.sql(s"""MERGE INTO lake.`$dir` t USING h46_sync_src s
-                  ON t.doc_id = s.doc_id
-                  WHEN MATCHED THEN UPDATE SET *
-                  WHEN NOT MATCHED THEN INSERT *
-                  WHEN NOT MATCHED BY SOURCE THEN DELETE"""): Unit
-        dir
-      })
+    sqlMergeSyncLakeCache(s, sfDir) {
+      s.conf.set("spark.sql.catalog.lake",
+        classOf[graft.sources.LakeCatalog].getName)
+      val dir = java.nio.file.Files
+        .createTempDirectory("graft-sql-sync").toString + "/lake"
+      val docs = graft.Tables.documents(s, sfDir)
+        .select(col("doc_id"), col("lang"), col("source"),
+          col("n_chars"))
+      docs.repartition(8).write.parquet(dir)
+      graft.sources.History.enableManifests(s, dir): Unit
+      docs.filter(col("doc_id") % 3 === 0)
+        .withColumn("n_chars", col("n_chars") + 50L)
+        .unionByName(docs.filter(col("doc_id") < 25)
+          .withColumn("doc_id", col("doc_id") + 40000000L)
+          .withColumn("source", lit("sync")))
+        .createOrReplaceTempView("h46_sync_src")
+      s.sql(s"""MERGE INTO lake.`$dir` t USING h46_sync_src s
+                ON t.doc_id = s.doc_id
+                WHEN MATCHED THEN UPDATE SET *
+                WHEN NOT MATCHED THEN INSERT *
+                WHEN NOT MATCHED BY SOURCE THEN DELETE"""): Unit
+      dir
+    }
 
   /** h56's lake: corpus through the engine write path, then one
     * correlated-EXISTS SQL DELETE (decorrelated onto the keyed-frame
     * DV route, with a subquery-side conjunct AND a residual
     * target-side conjunct) followed by one NOT EXISTS DELETE (the
     * anti-join). */
-  private val sqlDelExistsLakeCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
+  private val sqlDelExistsLakeCache = lakeMemo[String]()
 
   private def sqlDelExistsLake(s: SparkSession, sfDir: String): String =
-    sqlDelExistsLakeCache.computeIfAbsent((graft.SessionKey(s), sfDir),
-      _ => {
-        Memos.install(s)
-        s.conf.set("spark.sql.catalog.lake",
-          classOf[graft.sources.LakeCatalog].getName)
-        val dir = java.nio.file.Files
-          .createTempDirectory("graft-sql-dexists").toString + "/lake"
-        val docs = graft.Tables.documents(s, sfDir)
-          .select(col("doc_id"), col("lang"), col("source"),
-            col("n_chars"))
-        docs.repartition(8).write.parquet(dir)
-        graft.sources.History.enableManifests(s, dir): Unit
-        docs.filter(col("doc_id") % 3 === 0)
-          .select(col("doc_id"), (col("n_chars") % 5).as("sev"))
-          .createOrReplaceTempView("h56_flags")
-        s.sql(s"""DELETE FROM lake.`$dir` t
-                  WHERE EXISTS (SELECT 1 FROM h56_flags f
-                                WHERE f.doc_id = t.doc_id AND f.sev >= 2)
-                    AND t.n_chars >= 100""")
-        docs.filter(col("doc_id") % 11 =!= 7).select(col("doc_id"))
-          .createOrReplaceTempView("h56_keep")
-        s.sql(s"""DELETE FROM lake.`$dir` t
-                  WHERE NOT EXISTS (SELECT 1 FROM h56_keep k
-                                    WHERE k.doc_id = t.doc_id)""")
-        dir
-      })
+    sqlDelExistsLakeCache(s, sfDir) {
+      s.conf.set("spark.sql.catalog.lake",
+        classOf[graft.sources.LakeCatalog].getName)
+      val dir = java.nio.file.Files
+        .createTempDirectory("graft-sql-dexists").toString + "/lake"
+      val docs = graft.Tables.documents(s, sfDir)
+        .select(col("doc_id"), col("lang"), col("source"),
+          col("n_chars"))
+      docs.repartition(8).write.parquet(dir)
+      graft.sources.History.enableManifests(s, dir): Unit
+      docs.filter(col("doc_id") % 3 === 0)
+        .select(col("doc_id"), (col("n_chars") % 5).as("sev"))
+        .createOrReplaceTempView("h56_flags")
+      s.sql(s"""DELETE FROM lake.`$dir` t
+                WHERE EXISTS (SELECT 1 FROM h56_flags f
+                              WHERE f.doc_id = t.doc_id AND f.sev >= 2)
+                  AND t.n_chars >= 100""")
+      docs.filter(col("doc_id") % 11 =!= 7).select(col("doc_id"))
+        .createOrReplaceTempView("h56_keep")
+      s.sql(s"""DELETE FROM lake.`$dir` t
+                WHERE NOT EXISTS (SELECT 1 FROM h56_keep k
+                                  WHERE k.doc_id = t.doc_id)""")
+      dir
+    }
 
   /** h62's lake: corpus, then one UNCORRELATED scalar-subquery SET
     * (corpus-subset max as one literal) and one CORRELATED
     * scalar-subquery SET (per-lang max over a subset that EXCLUDES
     * 'de' — de rows probe an empty group and take the aggregate's
     * NULL). */
-  private val sqlScalarSetLakeCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
+  private val sqlScalarSetLakeCache = lakeMemo[String]()
 
   private def sqlScalarSetLake(s: SparkSession, sfDir: String): String =
-    sqlScalarSetLakeCache.computeIfAbsent((graft.SessionKey(s), sfDir),
-      _ => {
-        Memos.install(s)
-        s.conf.set("spark.sql.catalog.lake",
-          classOf[graft.sources.LakeCatalog].getName)
-        val dir = java.nio.file.Files
-          .createTempDirectory("graft-sql-scalarset").toString + "/lake"
-        val docs = graft.Tables.documents(s, sfDir)
-          .select(col("doc_id"), col("lang"), col("source"),
-            col("n_chars"))
-        docs.repartition(8).write.parquet(dir)
-        graft.sources.History.enableManifests(s, dir): Unit
-        docs.filter(col("doc_id") % 4 === 0)
-          .createOrReplaceTempView("h62_sub_all")
-        docs.filter(col("doc_id") % 4 === 0 && col("lang") =!= "de")
-          .createOrReplaceTempView("h62_sub_lang")
-        s.sql(s"""UPDATE lake.`$dir` t
-                  SET n_chars = (SELECT MAX(n_chars) FROM h62_sub_all)
-                  WHERE t.doc_id % 9 = 2"""): Unit
-        s.sql(s"""UPDATE lake.`$dir` t
-                  SET n_chars = (SELECT MAX(o.n_chars + 5)
-                                 FROM h62_sub_lang o
-                                 WHERE o.lang = t.lang)
-                  WHERE t.doc_id % 9 = 5"""): Unit
-        dir
-      })
+    sqlScalarSetLakeCache(s, sfDir) {
+      s.conf.set("spark.sql.catalog.lake",
+        classOf[graft.sources.LakeCatalog].getName)
+      val dir = java.nio.file.Files
+        .createTempDirectory("graft-sql-scalarset").toString + "/lake"
+      val docs = graft.Tables.documents(s, sfDir)
+        .select(col("doc_id"), col("lang"), col("source"),
+          col("n_chars"))
+      docs.repartition(8).write.parquet(dir)
+      graft.sources.History.enableManifests(s, dir): Unit
+      docs.filter(col("doc_id") % 4 === 0)
+        .createOrReplaceTempView("h62_sub_all")
+      docs.filter(col("doc_id") % 4 === 0 && col("lang") =!= "de")
+        .createOrReplaceTempView("h62_sub_lang")
+      s.sql(s"""UPDATE lake.`$dir` t
+                SET n_chars = (SELECT MAX(n_chars) FROM h62_sub_all)
+                WHERE t.doc_id % 9 = 2"""): Unit
+      s.sql(s"""UPDATE lake.`$dir` t
+                SET n_chars = (SELECT MAX(o.n_chars + 5)
+                               FROM h62_sub_lang o
+                               WHERE o.lang = t.lang)
+                WHERE t.doc_id % 9 = 5"""): Unit
+      dir
+    }
 
   /** h63's lake: corpus, then one correlated NOT IN DELETE — the
     * subquery's own IS NOT NULL filter is the non-null proof the
     * translation requires; 'de' is excluded from the subset so its
     * rows exercise the empty-group (NOT IN = TRUE) arm. */
-  private val sqlNotInLakeCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
+  private val sqlNotInLakeCache = lakeMemo[String]()
 
   private def sqlNotInLake(s: SparkSession, sfDir: String): String =
-    sqlNotInLakeCache.computeIfAbsent((graft.SessionKey(s), sfDir),
-      _ => {
-        Memos.install(s)
-        s.conf.set("spark.sql.catalog.lake",
-          classOf[graft.sources.LakeCatalog].getName)
-        val dir = java.nio.file.Files
-          .createTempDirectory("graft-sql-notin").toString + "/lake"
-        val docs = graft.Tables.documents(s, sfDir)
-          .select(col("doc_id"), col("lang"), col("source"),
-            col("n_chars"))
-        docs.repartition(8).write.parquet(dir)
-        graft.sources.History.enableManifests(s, dir): Unit
-        docs.filter(col("doc_id") % 3 === 0 && col("lang") =!= "de")
-          .createOrReplaceTempView("h63_sub")
-        s.sql(s"""DELETE FROM lake.`$dir` t
-                  WHERE t.n_chars NOT IN (SELECT o.n_chars FROM h63_sub o
-                                          WHERE o.lang = t.lang
-                                            AND o.n_chars IS NOT NULL)
-                    AND t.doc_id % 2 = 0"""): Unit
-        dir
-      })
+    sqlNotInLakeCache(s, sfDir) {
+      s.conf.set("spark.sql.catalog.lake",
+        classOf[graft.sources.LakeCatalog].getName)
+      val dir = java.nio.file.Files
+        .createTempDirectory("graft-sql-notin").toString + "/lake"
+      val docs = graft.Tables.documents(s, sfDir)
+        .select(col("doc_id"), col("lang"), col("source"),
+          col("n_chars"))
+      docs.repartition(8).write.parquet(dir)
+      graft.sources.History.enableManifests(s, dir): Unit
+      docs.filter(col("doc_id") % 3 === 0 && col("lang") =!= "de")
+        .createOrReplaceTempView("h63_sub")
+      s.sql(s"""DELETE FROM lake.`$dir` t
+                WHERE t.n_chars NOT IN (SELECT o.n_chars FROM h63_sub o
+                                        WHERE o.lang = t.lang
+                                          AND o.n_chars IS NOT NULL)
+                  AND t.doc_id % 2 = 0"""): Unit
+      dir
+    }
 
   /** h64's lake: corpus, then one compound-conjunct DELETE —
     * `EXISTS(a) AND NOT EXISTS(b)` folded into one decorrelated key
     * frame (a's keys minus b's). */
-  private val sqlExistsPairLakeCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
+  private val sqlExistsPairLakeCache = lakeMemo[String]()
 
   private def sqlExistsPairLake(s: SparkSession, sfDir: String): String =
-    sqlExistsPairLakeCache.computeIfAbsent((graft.SessionKey(s), sfDir),
-      _ => {
-        Memos.install(s)
-        s.conf.set("spark.sql.catalog.lake",
-          classOf[graft.sources.LakeCatalog].getName)
-        val dir = java.nio.file.Files
-          .createTempDirectory("graft-sql-exipair").toString + "/lake"
-        val docs = graft.Tables.documents(s, sfDir)
-          .select(col("doc_id"), col("lang"), col("source"),
-            col("n_chars"))
-        docs.repartition(8).write.parquet(dir)
-        graft.sources.History.enableManifests(s, dir): Unit
-        docs.filter(col("doc_id") % 2 === 0)
-          .createOrReplaceTempView("h64_a")
-        docs.filter(col("doc_id") % 5 === 0)
-          .createOrReplaceTempView("h64_b")
-        s.sql(s"""DELETE FROM lake.`$dir` t
-                  WHERE EXISTS (SELECT 1 FROM h64_a a
-                                WHERE a.doc_id = t.doc_id
-                                  AND a.n_chars >= 100)
-                    AND NOT EXISTS (SELECT 1 FROM h64_b b
-                                    WHERE b.doc_id = t.doc_id
-                                      AND b.lang = 'en')"""): Unit
-        dir
-      })
+    sqlExistsPairLakeCache(s, sfDir) {
+      s.conf.set("spark.sql.catalog.lake",
+        classOf[graft.sources.LakeCatalog].getName)
+      val dir = java.nio.file.Files
+        .createTempDirectory("graft-sql-exipair").toString + "/lake"
+      val docs = graft.Tables.documents(s, sfDir)
+        .select(col("doc_id"), col("lang"), col("source"),
+          col("n_chars"))
+      docs.repartition(8).write.parquet(dir)
+      graft.sources.History.enableManifests(s, dir): Unit
+      docs.filter(col("doc_id") % 2 === 0)
+        .createOrReplaceTempView("h64_a")
+      docs.filter(col("doc_id") % 5 === 0)
+        .createOrReplaceTempView("h64_b")
+      s.sql(s"""DELETE FROM lake.`$dir` t
+                WHERE EXISTS (SELECT 1 FROM h64_a a
+                              WHERE a.doc_id = t.doc_id
+                                AND a.n_chars >= 100)
+                  AND NOT EXISTS (SELECT 1 FROM h64_b b
+                                  WHERE b.doc_id = t.doc_id
+                                    AND b.lang = 'en')"""): Unit
+      dir
+    }
 
   /** h66's lake: corpus, then one MIXED-ARM compound DELETE —
     * `doc_id IN (a) AND NOT EXISTS (b correlated on doc_id)`, both
     * arms keyed on doc_id, folded into one Except frame. */
-  private val sqlMixedInLakeCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
+  private val sqlMixedInLakeCache = lakeMemo[String]()
 
   private def sqlMixedInLake(s: SparkSession, sfDir: String): String =
-    sqlMixedInLakeCache.computeIfAbsent((graft.SessionKey(s), sfDir),
-      _ => {
-        Memos.install(s)
-        s.conf.set("spark.sql.catalog.lake",
-          classOf[graft.sources.LakeCatalog].getName)
-        val dir = java.nio.file.Files
-          .createTempDirectory("graft-sql-mixin").toString + "/lake"
-        val docs = graft.Tables.documents(s, sfDir)
-          .select(col("doc_id"), col("lang"), col("source"),
-            col("n_chars"))
-        docs.repartition(8).write.parquet(dir)
-        graft.sources.History.enableManifests(s, dir): Unit
-        docs.filter(col("n_chars") >= 120)
-          .createOrReplaceTempView("h66_a")
-        docs.filter(col("lang") === "en")
-          .createOrReplaceTempView("h66_b")
-        s.sql(s"""DELETE FROM lake.`$dir` t
-                  WHERE t.doc_id IN (SELECT a.doc_id FROM h66_a a)
-                    AND NOT EXISTS (SELECT 1 FROM h66_b b
-                                    WHERE b.doc_id = t.doc_id)"""): Unit
-        dir
-      })
+    sqlMixedInLakeCache(s, sfDir) {
+      s.conf.set("spark.sql.catalog.lake",
+        classOf[graft.sources.LakeCatalog].getName)
+      val dir = java.nio.file.Files
+        .createTempDirectory("graft-sql-mixin").toString + "/lake"
+      val docs = graft.Tables.documents(s, sfDir)
+        .select(col("doc_id"), col("lang"), col("source"),
+          col("n_chars"))
+      docs.repartition(8).write.parquet(dir)
+      graft.sources.History.enableManifests(s, dir): Unit
+      docs.filter(col("n_chars") >= 120)
+        .createOrReplaceTempView("h66_a")
+      docs.filter(col("lang") === "en")
+        .createOrReplaceTempView("h66_b")
+      s.sql(s"""DELETE FROM lake.`$dir` t
+                WHERE t.doc_id IN (SELECT a.doc_id FROM h66_a a)
+                  AND NOT EXISTS (SELECT 1 FROM h66_b b
+                                  WHERE b.doc_id = t.doc_id)"""): Unit
+      dir
+    }
 
   /** h67's lake: corpus, then one correlated NOT IN DELETE whose inner
     * value is nullable-TYPED (CASE with no ELSE) but null-FREE — the
     * static proof fails, the runtime pre-commit probe passes. */
-  private val sqlNotInRuntimeLakeCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
+  private val sqlNotInRuntimeLakeCache = lakeMemo[String]()
 
   private def sqlNotInRuntimeLake(s: SparkSession, sfDir: String): String =
-    sqlNotInRuntimeLakeCache.computeIfAbsent((graft.SessionKey(s), sfDir),
-      _ => {
-        Memos.install(s)
-        s.conf.set("spark.sql.catalog.lake",
-          classOf[graft.sources.LakeCatalog].getName)
-        val dir = java.nio.file.Files
-          .createTempDirectory("graft-sql-notinrt").toString + "/lake"
-        val docs = graft.Tables.documents(s, sfDir)
-          .select(col("doc_id"), col("lang"), col("source"),
-            col("n_chars"))
-        docs.repartition(8).write.parquet(dir)
-        graft.sources.History.enableManifests(s, dir): Unit
-        docs.filter(col("doc_id") % 3 === 0 && col("lang") =!= "de")
-          .select(col("lang"),
-            when(col("n_chars") >= -1, col("n_chars")).as("w"))
-          .createOrReplaceTempView("h67_sub")
-        s.sql(s"""DELETE FROM lake.`$dir` t
-                  WHERE t.n_chars NOT IN (SELECT o.w FROM h67_sub o
-                                          WHERE o.lang = t.lang)
-                    AND t.doc_id % 2 = 1"""): Unit
-        dir
-      })
+    sqlNotInRuntimeLakeCache(s, sfDir) {
+      s.conf.set("spark.sql.catalog.lake",
+        classOf[graft.sources.LakeCatalog].getName)
+      val dir = java.nio.file.Files
+        .createTempDirectory("graft-sql-notinrt").toString + "/lake"
+      val docs = graft.Tables.documents(s, sfDir)
+        .select(col("doc_id"), col("lang"), col("source"),
+          col("n_chars"))
+      docs.repartition(8).write.parquet(dir)
+      graft.sources.History.enableManifests(s, dir): Unit
+      docs.filter(col("doc_id") % 3 === 0 && col("lang") =!= "de")
+        .select(col("lang"),
+          when(col("n_chars") >= -1, col("n_chars")).as("w"))
+        .createOrReplaceTempView("h67_sub")
+      s.sql(s"""DELETE FROM lake.`$dir` t
+                WHERE t.n_chars NOT IN (SELECT o.w FROM h67_sub o
+                                        WHERE o.lang = t.lang)
+                  AND t.doc_id % 2 = 1"""): Unit
+      dir
+    }
 
   /** h65's lake: corpus with `source` declared, SQL DROP COLUMN
     * source, an era-2 INSERT without it, CALL lake.undrop_column, and
     * an era-3 INSERT with it again. */
-  private val sqlUndropLakeCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
+  private val sqlUndropLakeCache = lakeMemo[String]()
 
   private def sqlUndropLake(s: SparkSession, sfDir: String): String =
-    sqlUndropLakeCache.computeIfAbsent((graft.SessionKey(s), sfDir),
-      _ => {
-        Memos.install(s)
-        s.conf.set("spark.sql.catalog.lake",
-          classOf[graft.sources.LakeCatalog].getName)
-        val dir = java.nio.file.Files
-          .createTempDirectory("graft-sql-undrop").toString + "/lake"
-        graft.Tables.documents(s, sfDir)
-          .select(col("doc_id"), col("lang"), col("source"),
-            col("n_chars"))
-          .repartition(8)
-          .write.parquet(dir)
-        graft.sources.History.enableManifests(s, dir): Unit
-        graft.sources.SchemaLog.declare(s, dir): Unit
-        s.sql(s"ALTER TABLE lake.`$dir` DROP COLUMN source"): Unit
-        s.sql(s"""INSERT INTO lake.`$dir`
-                  SELECT doc_id + 86000000, lang, n_chars
-                  FROM parquet.`$sfDir/documents.parquet`
-                  WHERE doc_id < 15"""): Unit
-        s.sql(s"CALL lake.undrop_column('$dir', 'source')").collect(): Unit
-        // the undropped field re-declares at the END (ADD COLUMN
-        // position semantics) — the positional INSERT follows it
-        s.sql(s"""INSERT INTO lake.`$dir`
-                  SELECT doc_id + 87000000, lang, n_chars, source
-                  FROM parquet.`$sfDir/documents.parquet`
-                  WHERE doc_id < 10"""): Unit
-        dir
-      })
+    sqlUndropLakeCache(s, sfDir) {
+      s.conf.set("spark.sql.catalog.lake",
+        classOf[graft.sources.LakeCatalog].getName)
+      val dir = java.nio.file.Files
+        .createTempDirectory("graft-sql-undrop").toString + "/lake"
+      graft.Tables.documents(s, sfDir)
+        .select(col("doc_id"), col("lang"), col("source"),
+          col("n_chars"))
+        .repartition(8)
+        .write.parquet(dir)
+      graft.sources.History.enableManifests(s, dir): Unit
+      graft.sources.SchemaLog.declare(s, dir): Unit
+      s.sql(s"ALTER TABLE lake.`$dir` DROP COLUMN source"): Unit
+      s.sql(s"""INSERT INTO lake.`$dir`
+                SELECT doc_id + 86000000, lang, n_chars
+                FROM parquet.`$sfDir/documents.parquet`
+                WHERE doc_id < 15"""): Unit
+      s.sql(s"CALL lake.undrop_column('$dir', 'source')").collect(): Unit
+      // the undropped field re-declares at the END (ADD COLUMN
+      // position semantics) — the positional INSERT follows it
+      s.sql(s"""INSERT INTO lake.`$dir`
+                SELECT doc_id + 87000000, lang, n_chars, source
+                FROM parquet.`$sfDir/documents.parquet`
+                WHERE doc_id < 10"""): Unit
+      dir
+    }
 
   /** h57's lake: corpus, then one correlated-IN SQL UPDATE whose pair
     * table carries each row's expected lang from the NEXT document
     * (doc_id − 1 shift) — matched rows get +10000 n_chars. */
-  private val sqlUpdCorrInLakeCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
+  private val sqlUpdCorrInLakeCache = lakeMemo[String]()
 
   private def sqlUpdCorrInLake(s: SparkSession, sfDir: String): String =
-    sqlUpdCorrInLakeCache.computeIfAbsent((graft.SessionKey(s), sfDir),
-      _ => {
-        Memos.install(s)
-        s.conf.set("spark.sql.catalog.lake",
-          classOf[graft.sources.LakeCatalog].getName)
-        val dir = java.nio.file.Files
-          .createTempDirectory("graft-sql-ucorr").toString + "/lake"
-        val docs = graft.Tables.documents(s, sfDir)
-          .select(col("doc_id"), col("lang"), col("source"),
-            col("n_chars"))
-        docs.repartition(8).write.parquet(dir)
-        graft.sources.History.enableManifests(s, dir): Unit
-        docs.filter(col("doc_id") % 5 === 0)
-          .select((col("doc_id") - 1L).as("doc_id"), col("lang"))
-          .createOrReplaceTempView("h57_pairs")
-        s.sql(s"""UPDATE lake.`$dir` t SET n_chars = n_chars + 10000
-                  WHERE t.lang IN (SELECT p.lang FROM h57_pairs p
-                                   WHERE p.doc_id = t.doc_id)""")
-        dir
-      })
+    sqlUpdCorrInLakeCache(s, sfDir) {
+      s.conf.set("spark.sql.catalog.lake",
+        classOf[graft.sources.LakeCatalog].getName)
+      val dir = java.nio.file.Files
+        .createTempDirectory("graft-sql-ucorr").toString + "/lake"
+      val docs = graft.Tables.documents(s, sfDir)
+        .select(col("doc_id"), col("lang"), col("source"),
+          col("n_chars"))
+      docs.repartition(8).write.parquet(dir)
+      graft.sources.History.enableManifests(s, dir): Unit
+      docs.filter(col("doc_id") % 5 === 0)
+        .select((col("doc_id") - 1L).as("doc_id"), col("lang"))
+        .createOrReplaceTempView("h57_pairs")
+      s.sql(s"""UPDATE lake.`$dir` t SET n_chars = n_chars + 10000
+                WHERE t.lang IN (SELECT p.lang FROM h57_pairs p
+                                 WHERE p.doc_id = t.doc_id)""")
+      dir
+    }
 
   /** h58's lake: corpus, then one full-sync MERGE whose by-source arms
     * UPDATE instead of delete — odd-n_chars unmatched rows mark
     * source='stale', the rest zero their n_chars (ordered arms,
     * first-match-wins); matched rows take a +50 update, new keys
     * insert. */
-  private val sqlMergeSyncUpdLakeCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
+  private val sqlMergeSyncUpdLakeCache = lakeMemo[String]()
 
   private def sqlMergeSyncUpdLake(s: SparkSession, sfDir: String): String =
-    sqlMergeSyncUpdLakeCache.computeIfAbsent((graft.SessionKey(s), sfDir),
-      _ => {
-        Memos.install(s)
-        s.conf.set("spark.sql.catalog.lake",
-          classOf[graft.sources.LakeCatalog].getName)
-        val dir = java.nio.file.Files
-          .createTempDirectory("graft-sql-syncupd").toString + "/lake"
-        val docs = graft.Tables.documents(s, sfDir)
-          .select(col("doc_id"), col("lang"), col("source"),
-            col("n_chars"))
-        docs.repartition(8).write.parquet(dir)
-        graft.sources.History.enableManifests(s, dir): Unit
-        docs.filter(col("doc_id") % 3 === 0)
-          .withColumn("n_chars", col("n_chars") + 50L)
-          .unionByName(docs.filter(col("doc_id") < 30)
-            .withColumn("doc_id", col("doc_id") + 90000000L)
-            .withColumn("source", lit("new")))
-          .createOrReplaceTempView("h58_sync_src")
-        s.sql(s"""MERGE INTO lake.`$dir` t USING h58_sync_src s
-                  ON t.doc_id = s.doc_id
-                  WHEN MATCHED THEN UPDATE SET *
-                  WHEN NOT MATCHED THEN INSERT *
-                  WHEN NOT MATCHED BY SOURCE AND t.n_chars % 2 = 1
-                    THEN UPDATE SET source = 'stale'
-                  WHEN NOT MATCHED BY SOURCE
-                    THEN UPDATE SET n_chars = 0"""): Unit
-        dir
-      })
+    sqlMergeSyncUpdLakeCache(s, sfDir) {
+      s.conf.set("spark.sql.catalog.lake",
+        classOf[graft.sources.LakeCatalog].getName)
+      val dir = java.nio.file.Files
+        .createTempDirectory("graft-sql-syncupd").toString + "/lake"
+      val docs = graft.Tables.documents(s, sfDir)
+        .select(col("doc_id"), col("lang"), col("source"),
+          col("n_chars"))
+      docs.repartition(8).write.parquet(dir)
+      graft.sources.History.enableManifests(s, dir): Unit
+      docs.filter(col("doc_id") % 3 === 0)
+        .withColumn("n_chars", col("n_chars") + 50L)
+        .unionByName(docs.filter(col("doc_id") < 30)
+          .withColumn("doc_id", col("doc_id") + 90000000L)
+          .withColumn("source", lit("new")))
+        .createOrReplaceTempView("h58_sync_src")
+      s.sql(s"""MERGE INTO lake.`$dir` t USING h58_sync_src s
+                ON t.doc_id = s.doc_id
+                WHEN MATCHED THEN UPDATE SET *
+                WHEN NOT MATCHED THEN INSERT *
+                WHEN NOT MATCHED BY SOURCE AND t.n_chars % 2 = 1
+                  THEN UPDATE SET source = 'stale'
+                WHEN NOT MATCHED BY SOURCE
+                  THEN UPDATE SET n_chars = 0"""): Unit
+      dir
+    }
 
   /** h60's lake: corpus partitioned by lang, re-grained to source via
     * CALL repartition_lake, then an era-2 slice appended under the new
     * scheme. */
-  private val repartitionLakeDirCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
+  private val repartitionLakeDirCache = lakeMemo[String]()
 
   private def repartitionLakeDir(s: SparkSession, sfDir: String): String =
-    repartitionLakeDirCache.computeIfAbsent((graft.SessionKey(s), sfDir),
-      _ => {
-        Memos.install(s)
-        s.conf.set("spark.sql.catalog.lake",
-          classOf[graft.sources.LakeCatalog].getName)
-        val dir = java.nio.file.Files
-          .createTempDirectory("graft-sql-regrain").toString + "/lake"
-        val docs = graft.Tables.documents(s, sfDir)
-          .select(col("doc_id"), col("n_chars"), col("lang"),
-            col("source"))
-        docs.repartition(col("lang"))
-          .write.partitionBy("lang").parquet(dir)
-        graft.sources.History.enableManifests(s, dir): Unit
-        s.sql(s"CALL lake.repartition_lake('$dir', 'source')"): Unit
-        graft.sources.History.append(s, dir,
-          docs.filter(col("doc_id") < 35)
-            .withColumn("doc_id", col("doc_id") + 95000000L),
-          key = "h60-era2"): Unit
-        dir
-      })
+    repartitionLakeDirCache(s, sfDir) {
+      s.conf.set("spark.sql.catalog.lake",
+        classOf[graft.sources.LakeCatalog].getName)
+      val dir = java.nio.file.Files
+        .createTempDirectory("graft-sql-regrain").toString + "/lake"
+      val docs = graft.Tables.documents(s, sfDir)
+        .select(col("doc_id"), col("n_chars"), col("lang"),
+          col("source"))
+      docs.repartition(col("lang"))
+        .write.partitionBy("lang").parquet(dir)
+      graft.sources.History.enableManifests(s, dir): Unit
+      s.sql(s"CALL lake.repartition_lake('$dir', 'source')"): Unit
+      graft.sources.History.append(s, dir,
+        docs.filter(col("doc_id") < 35)
+          .withColumn("doc_id", col("doc_id") + 95000000L),
+        key = "h60-era2"): Unit
+      dir
+    }
 
   /** h59's DESTINATION lake: source lake built from the corpus, then
     * one AvailableNow readStream("graft-lake") → transform →
     * writeStream("graft-lake") run lands the v1 bootstrap snapshot
     * (plus a follow-up append committed before the run) exactly once
     * in a CREATE TABLE'd destination. */
-  private val streamLoopLakeCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
+  private val streamLoopLakeCache = lakeMemo[String]()
 
   private def streamLoopLake(s: SparkSession, sfDir: String): String =
-    streamLoopLakeCache.computeIfAbsent((graft.SessionKey(s), sfDir),
-      _ => {
-        Memos.install(s)
-        s.conf.set("spark.sql.catalog.lake",
-          classOf[graft.sources.LakeCatalog].getName)
-        val tmp = java.nio.file.Files
-          .createTempDirectory("graft-sql-sloop").toString
-        val src = s"$tmp/src"
-        val dst = s"$tmp/dst"
-        val docs = graft.Tables.documents(s, sfDir)
-          .select(col("doc_id"), col("lang"), col("source"),
-            col("n_chars"))
-        docs.filter(col("doc_id") % 2 === 0).repartition(8)
-          .write.parquet(src)
-        graft.sources.History.enableManifests(s, src): Unit
-        // a second source commit before the stream runs: the one
-        // AvailableNow window must carry bootstrap + follow-up
-        graft.sources.History.append(s, src,
-          docs.filter(col("doc_id") % 2 === 1), key = "h59-odds"): Unit
-        s.sql(s"""CREATE TABLE lake.`$dst`
-                  (doc_id BIGINT, lang STRING, source STRING,
-                   n_chars BIGINT) USING parquet"""): Unit
-        s.readStream.format("graft-lake")
-          .option("startingVersion", "1").load(src)
-          .filter(col("_change") === "insert")
-          .withColumn("n_chars", col("n_chars") + 7L)
-          .select("doc_id", "lang", "source", "n_chars")
-          .writeStream.format("graft-lake")
-          .option("checkpointLocation", s"$tmp/ckpt")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start(dst).awaitTermination(120000L): Unit
-        dst
-      })
+    streamLoopLakeCache(s, sfDir) {
+      s.conf.set("spark.sql.catalog.lake",
+        classOf[graft.sources.LakeCatalog].getName)
+      val tmp = java.nio.file.Files
+        .createTempDirectory("graft-sql-sloop").toString
+      val src = s"$tmp/src"
+      val dst = s"$tmp/dst"
+      val docs = graft.Tables.documents(s, sfDir)
+        .select(col("doc_id"), col("lang"), col("source"),
+          col("n_chars"))
+      docs.filter(col("doc_id") % 2 === 0).repartition(8)
+        .write.parquet(src)
+      graft.sources.History.enableManifests(s, src): Unit
+      // a second source commit before the stream runs: the one
+      // AvailableNow window must carry bootstrap + follow-up
+      graft.sources.History.append(s, src,
+        docs.filter(col("doc_id") % 2 === 1), key = "h59-odds"): Unit
+      s.sql(s"""CREATE TABLE lake.`$dst`
+                (doc_id BIGINT, lang STRING, source STRING,
+                 n_chars BIGINT) USING parquet"""): Unit
+      s.readStream.format("graft-lake")
+        .option("startingVersion", "1").load(src)
+        .filter(col("_change") === "insert")
+        .withColumn("n_chars", col("n_chars") + 7L)
+        .select("doc_id", "lang", "source", "n_chars")
+        .writeStream.format("graft-lake")
+        .option("checkpointLocation", s"$tmp/ckpt")
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .start(dst).awaitTermination(120000L): Unit
+      dst
+    }
 
   /** h47's lake: SQL-only CTAS (evens) → ALTER TABLE ADD COLUMNS
     * (quality DOUBLE, metadata-only) → INSERT (odds with values). */
-  private val sqlAlterLakeCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
+  private val sqlAlterLakeCache = lakeMemo[String]()
 
   private def sqlAlterLake(s: SparkSession, sfDir: String): String =
-    sqlAlterLakeCache.computeIfAbsent((graft.SessionKey(s), sfDir), _ => {
-      Memos.install(s)
+    sqlAlterLakeCache(s, sfDir) {
       s.conf.set("spark.sql.catalog.lake",
         classOf[graft.sources.LakeCatalog].getName)
       val dir = java.nio.file.Files
@@ -2421,63 +2294,55 @@ object HistoryQueries {
                 FROM parquet.`$sfDir/documents.parquet`
                 WHERE doc_id % 2 = 1"""): Unit
       dir
-    })
+    }
 
   /** h48's lake: lang-partitioned corpus with fresh row counts — the
     * partition-column-extrema serve state. */
-  private val sqlPartExtremaLakeCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
+  private val sqlPartExtremaLakeCache = lakeMemo[String]()
 
   private def sqlPartExtremaLake(s: SparkSession, sfDir: String): String =
-    sqlPartExtremaLakeCache.computeIfAbsent((graft.SessionKey(s), sfDir),
-      _ => {
-        Memos.install(s)
-        s.conf.set("spark.sql.catalog.lake",
-          classOf[graft.sources.LakeCatalog].getName)
-        val dir = java.nio.file.Files
-          .createTempDirectory("graft-sql-pext").toString + "/lake"
-        graft.Tables.documents(s, sfDir)
-          .select(col("doc_id"), col("lang"), col("source"),
-            col("n_chars"))
-          .repartition(col("lang"))
-          .write.partitionBy("lang").parquet(dir)
-        graft.sources.History.enableManifests(s, dir): Unit
-        graft.sources.History.refreshRowCounts(s, dir): Unit
-        dir
-      })
+    sqlPartExtremaLakeCache(s, sfDir) {
+      s.conf.set("spark.sql.catalog.lake",
+        classOf[graft.sources.LakeCatalog].getName)
+      val dir = java.nio.file.Files
+        .createTempDirectory("graft-sql-pext").toString + "/lake"
+      graft.Tables.documents(s, sfDir)
+        .select(col("doc_id"), col("lang"), col("source"),
+          col("n_chars"))
+        .repartition(col("lang"))
+        .write.partitionBy("lang").parquet(dir)
+      graft.sources.History.enableManifests(s, dir): Unit
+      graft.sources.History.refreshRowCounts(s, dir): Unit
+      dir
+    }
 
   /** h49's lake: documents with a derived NULLABLE column, stats (and
     * their piggybacked null counts) refreshed — the COUNT(col) serve
     * state. */
-  private val sqlCountColLakeCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
+  private val sqlCountColLakeCache = lakeMemo[String]()
 
   private def sqlCountColLake(s: SparkSession, sfDir: String): String =
-    sqlCountColLakeCache.computeIfAbsent((graft.SessionKey(s), sfDir),
-      _ => {
-        Memos.install(s)
-        s.conf.set("spark.sql.catalog.lake",
-          classOf[graft.sources.LakeCatalog].getName)
-        val dir = java.nio.file.Files
-          .createTempDirectory("graft-sql-cntcol").toString + "/lake"
-        graft.Tables.documents(s, sfDir)
-          .select(col("doc_id"),
-            when(col("doc_id") % 7 === 0, lit(null))
-              .otherwise(col("lang")).as("lang_opt"))
-          .repartition(4)
-          .write.parquet(dir)
-        graft.sources.History.enableManifests(s, dir): Unit
-        graft.sources.History.refreshRowCounts(s, dir): Unit
-        graft.sources.History.refreshStats(s, dir, "lang_opt"): Unit
-        graft.sources.History.refreshStats(s, dir, "doc_id"): Unit
-        dir
-      })
+    sqlCountColLakeCache(s, sfDir) {
+      s.conf.set("spark.sql.catalog.lake",
+        classOf[graft.sources.LakeCatalog].getName)
+      val dir = java.nio.file.Files
+        .createTempDirectory("graft-sql-cntcol").toString + "/lake"
+      graft.Tables.documents(s, sfDir)
+        .select(col("doc_id"),
+          when(col("doc_id") % 7 === 0, lit(null))
+            .otherwise(col("lang")).as("lang_opt"))
+        .repartition(4)
+        .write.parquet(dir)
+      graft.sources.History.enableManifests(s, dir): Unit
+      graft.sources.History.refreshRowCounts(s, dir): Unit
+      graft.sources.History.refreshStats(s, dir, "lang_opt"): Unit
+      graft.sources.History.refreshStats(s, dir, "doc_id"): Unit
+      dir
+    }
 
-  private val rollupCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
+  private val rollupCache = lakeMemo[String]()
 
-  private val exportCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
+  private val exportCache = lakeMemo[String]()
 
   def oracleSql: Map[String, String] = Map(
     "h01_monitor_from" ->

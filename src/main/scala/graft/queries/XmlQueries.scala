@@ -34,30 +34,17 @@ object XmlQueries {
     * (input relation, not query work — the parse itself is gated by x01
     * and plan-spec'd for the single-parse barrier). */
   private val inputCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
+    new SessionMemo[String, DataFrame](perIteration = false)(
+      (_, _, df) => df.unpersist(blocking = false): Unit)
 
   private def memoInput(s: SparkSession, key: String)
                        (build: => DataFrame): DataFrame =
-    inputCache.computeIfAbsent(s"${graft.SessionKey(s)}|$key", _ => {
-      Memos.install(s)
+    inputCache(s, key) {
       val df = build.persist(
         org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       df.count(): Unit // materialize at build, not in the first query
       df
-    })
-
-  private[queries] def evict(s: SparkSession): Unit = {
-    val prefix = s"${graft.SessionKey(s)}|"
-    val it = inputCache.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      if (e.getKey.startsWith(prefix)) {
-        try e.getValue.unpersist(blocking = false)
-        catch { case _: Throwable => () } // context may already be down
-        it.remove()
-      }
     }
-  }
 
   private def detectorRecords(s: SparkSession): DataFrame =
     memoInput(s, "records") {

@@ -191,39 +191,23 @@ private[graft] object TransisConnCache {
   * filters are applied while framing — the file stands in for the
   * server, so the filter runs where the server's would.
   *
-  * The byte range of every matching document is indexed once and the
-  * index is rebuilt only when the file's length or modification time
-  * changes, so an idle poll reads no bytes and a read decodes only the
-  * documents it serves. */
+  * The byte range of every matching document is indexed once per
+  * (path, filters) for the whole JVM and the index is rebuilt only when
+  * the file's length or modification time changes, so an idle poll reads
+  * no bytes, a micro-batch task's fresh transport does not re-frame the
+  * file, and a read decodes only the documents it serves. */
 class FilePayloadTransport(path: String, filters: DocFilters = DocFilters())
     extends PayloadTransport {
-  import FilePayloadTransport.Index
-  @transient private var cached: Index = _
-
   private def file = java.nio.file.Paths.get(path)
 
   private def decode(bytes: Array[Byte], from: Int, until: Int): String =
     new String(bytes, from, until - from, java.nio.charset.StandardCharsets.UTF_8)
 
-  /** The index of the file as it is now: the cached one unless the
-    * file's length or modification time changed since it was built. */
-  private def index(): Index = synchronized {
-    val length = java.nio.file.Files.size(file)
-    val mtime = java.nio.file.Files.getLastModifiedTime(file).toMillis
-    if (cached == null || cached.length != length || cached.mtime != mtime) {
-      val starts, ends = Array.newBuilder[Long]
-      val framer = new NulFramer(java.nio.file.Files.newInputStream(file), filters)
-      try while (framer.advance()) { starts += framer.docStart; ends += framer.docEnd }
-      finally framer.close()
-      cached = Index(length, mtime, starts.result(), ends.result())
-    }
-    cached
-  }
-
-  override def available(): Long = index().starts.length.toLong
+  override def available(): Long =
+    FilePayloadTransport.index(path, filters).starts.length.toLong
 
   override def read(from: Long, until: Long): Iterator[String] = {
-    val ix = index()
+    val ix = FilePayloadTransport.index(path, filters)
     val n = ix.starts.length.toLong
     val (lo, hi) = (math.min(from, n).toInt, math.min(until, n).toInt)
     if (lo >= hi) Iterator.empty
@@ -246,6 +230,34 @@ object FilePayloadTransport {
     * [starts(i), ends(i)). */
   private final case class Index(length: Long, mtime: Long,
                                  starts: Array[Long], ends: Array[Long])
+
+  /** One index per (path, filters), kept for the life of the JVM. */
+  private val indexes =
+    new java.util.concurrent.ConcurrentHashMap[(String, DocFilters), Index]()
+
+  private val builds = new java.util.concurrent.atomic.AtomicLong()
+
+  /** How many times an index was framed from the file, JVM-wide. */
+  private[graft] def indexBuilds: Long = builds.get()
+
+  /** The index of the file as it is now: the shared one unless the
+    * file's length or modification time changed since it was built. */
+  private def index(path: String, filters: DocFilters): Index = {
+    val file = java.nio.file.Paths.get(path)
+    val length = java.nio.file.Files.size(file)
+    val mtime = java.nio.file.Files.getLastModifiedTime(file).toMillis
+    indexes.compute((path, filters), (_, cached) =>
+      if (cached != null && cached.length == length && cached.mtime == mtime)
+        cached
+      else {
+        builds.incrementAndGet(): Unit
+        val starts, ends = Array.newBuilder[Long]
+        val framer = new NulFramer(java.nio.file.Files.newInputStream(file), filters)
+        try while (framer.advance()) { starts += framer.docStart; ends += framer.docEnd }
+        finally framer.close()
+        Index(length, mtime, starts.result(), ends.result())
+      })
+  }
 }
 
 /** Live HTTP transport: the reference's ingress — a streaming GET with

@@ -101,4 +101,72 @@ class MemosSpec extends AnyFunSuite {
     Memos.evictAll(spark)
     assert(annDirs.isEmpty)
   }
+
+  private val sf = "/root/testdata/sf0.001"
+
+  private def graftTempDirs: Set[java.io.File] =
+    Option(new java.io.File(System.getProperty("java.io.tmpdir")).listFiles())
+      .getOrElse(Array.empty).filter(_.getName.startsWith("graft-")).toSet
+
+  /** The artifact root the d/s/t gates publish under for `sf`. */
+  private def artifactRoot: java.io.File =
+    new java.io.File(new org.apache.hadoop.fs.Path(
+      spark.sessionState.conf.warehousePath).toUri.getPath,
+      "graft_artifacts_" + Hashes.md5Hex(sf, 12))
+
+  private def run(gate: String): Long = {
+    val q = ExtQueries.queries.get(gate)
+      .orElse(graft.queries.HistoryQueries.queries.get(gate))
+      .orElse(graft.queries.XmlQueries.queries.get(gate))
+      .getOrElse(fail(s"no gate $gate"))
+    q(spark, sf).count()
+  }
+
+  test("teardown deletes every temp lake, the SQL lakes included") {
+    // start from a session with no memos, so each gate builds its lake
+    Memos.evictAll(spark)
+    val before = graftTempDirs
+    Seq("h43_sql_create_table", "h59_sql_stream_lake_loop",
+      "h60_sql_repartition_lake").foreach(g => assert(run(g) > 0, g))
+    val created = graftTempDirs -- before
+    assert(created.size >= 3, s"each gate should build its lake: $created")
+    Memos.evictAll(spark)
+    val left = created.filter(_.exists)
+    assert(left.isEmpty, s"temp lakes survived teardown: $left")
+  }
+
+  test("an artifact memo never serves a deleted directory") {
+    // t32's merges and s09's codes share one artifact root; teardown
+    // deletes the root, so it must also drop the merges memo
+    val first = run("t32_bpe_token_count")
+    assert(run("s09_pq_codes") > 0)
+    Memos.evictAll(spark)
+    assert(run("t32_bpe_token_count") === first)
+    Memos.evictAll(spark)
+  }
+
+  test("per-iteration eviction releases query frames and keeps artifacts and inputs") {
+    Memos.evictAll(spark)
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    def persisted = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(run("x01_detector_counts") > 0)
+    val inputs = persisted
+    assert(inputs.nonEmpty, "x01 should persist its input relation")
+    assert(run("d02_minhash_lsh") >= 0)
+    assert(run("d06_neardup_clusters") >= 0)
+    assert(run("s09_pq_codes") > 0)
+    val frames = persisted -- inputs
+    assert(frames.nonEmpty, "d02/d06 should persist pairs, signatures, clusters")
+    assert(artifactRoot.exists, "s09 should publish its artifacts")
+
+    Memos.evictQueryMemos(spark)
+
+    assert((persisted & frames).isEmpty,
+      s"query frames survived per-iteration eviction: ${persisted & frames}")
+    assert(inputs.subsetOf(persisted), "the x-family input memo was evicted")
+    assert(new java.io.File(artifactRoot, "codes").exists,
+      s"per-iteration eviction deleted s09's artifacts under $artifactRoot")
+    Memos.evictAll(spark)
+    assert(persisted.isEmpty)
+  }
 }

@@ -270,6 +270,25 @@ class TransisSourceSpec extends AnyFunSuite {
       batches.map(_.numInputRows).mkString(","))
   }
 
+  test("file transport: a backfill's micro-batches frame the file once") {
+    // every batch's task builds a fresh transport; the document index is
+    // shared per (path, filters), so the 3 + 3 + 1 backfill and the
+    // driver's offset polls frame the unchanged file once between them
+    val f = Files.createTempFile("transis-shared-index", ".payload").toString
+    writePayload(f, (1 to 7).map(i => s"doc-$i"): _*)
+    val builds = graft.sources.FilePayloadTransport.indexBuilds
+    val q = spark.readStream.format("transis")
+      .option("path", f).option("maxdocsperbatch", "3").load()
+      .select(col("value")).writeStream.outputMode("append")
+      .format("memory").queryName("transis_shared_index")
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .start()
+    assert(q.awaitTermination(120000), "AvailableNow query did not terminate")
+    assert(spark.table("transis_shared_index").count() === 7)
+    assert(q.recentProgress.count(_.numInputRows > 0) === 3)
+    assert(graft.sources.FilePayloadTransport.indexBuilds - builds === 1)
+  }
+
   test("HTTP offsets are incremental: O(1) connections across micro-batches") {
     // Live connection, 2 docs, 1 doc/batch → 2 micro-batches. Round-2
     // behavior opened a full-stream-re-reading connection per trigger
