@@ -2261,7 +2261,7 @@ object HistoryQueries {
       s.sql(s"""CREATE TABLE lake.`$dst`
                 (doc_id BIGINT, lang STRING, source STRING,
                  n_chars BIGINT) USING parquet"""): Unit
-      s.readStream.format("graft-lake")
+      val writer = s.readStream.format("graft-lake")
         .option("startingVersion", "1").load(src)
         .filter(col("_change") === "insert")
         .withColumn("n_chars", col("n_chars") + 7L)
@@ -2269,7 +2269,8 @@ object HistoryQueries {
         .writeStream.format("graft-lake")
         .option("checkpointLocation", s"$tmp/ckpt")
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start(dst).awaitTermination(120000L): Unit
+      graft.stream.LocalCheckpointFileManager.start(s)(writer.start(dst))
+        .awaitTermination(120000L): Unit
       dst
     }
 

@@ -39,7 +39,7 @@ object LmEnrich {
                   checkpointDir: String)
                  (onBatch: (DataFrame, Long) => Unit): StreamingQuery = {
     import org.apache.spark.sql.functions._
-    stream.writeStream
+    val writer = stream.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val scores = LmRollup.scoreDocs(batch.sparkSession, bigramDir,
@@ -50,6 +50,6 @@ object LmEnrich {
             coalesce(col("n_bigrams"), lit(0L)))
         onBatch(all, batchId)
       }
-      .start()
+    LocalCheckpointFileManager.start(stream.sparkSession)(writer.start())
   }
 }

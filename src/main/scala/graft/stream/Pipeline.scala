@@ -173,13 +173,14 @@ object Pipeline {
     */
   def run(records: DataFrame, sink: KinesisSink, di: DiFramework,
           checkpointDir: String, shards: Int = 1,
-          ledger: Option[BatchLedger] = None): StreamingQuery =
-    records.writeStream
+          ledger: Option[BatchLedger] = None): StreamingQuery = {
+    val writer = records.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         pushBatch(batch, batchId, sink, di, shards, ledger)
       }
-      .start()
+    LocalCheckpointFileManager.start(records.sparkSession)(writer.start())
+  }
 
   /** Stable per-stream-incarnation tag: the batch-id namespace IS the
     * streaming checkpoint (ids restart at 0 with a fresh checkpoint
@@ -289,7 +290,7 @@ object Pipeline {
     compactEvery.foreach(n => require(n > 0,
       s"compactEvery must be >= 1 (got $n); use None to disable"))
     val tag = streamTagOf(checkpointDir)
-    records.writeStream
+    val writer = records.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         compactEvery.foreach { _ =>
@@ -323,7 +324,7 @@ object Pipeline {
           }
         }
       }
-      .start()
+    LocalCheckpointFileManager.start(records.sparkSession)(writer.start())
   }
 
   /** Compact the lake partitions a batch touched: the touched (region,

@@ -37,12 +37,12 @@ object StreamingCountMin {
                    checkpointDir: String, depth: Int = 5,
                    width: Int = 8192): StreamingQuery = {
     val tag = Pipeline.streamTagOf(checkpointDir)
-    rows.writeStream
+    val writer = rows.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         sketchBatch(batch, batchId, hashOf, statePath, tag, depth, width)
       }
-      .start()
+    LocalCheckpointFileManager.start(rows.sparkSession)(writer.start())
   }
 
   /** One maintenance batch — extracted like `StreamingDedup.admitBatch`

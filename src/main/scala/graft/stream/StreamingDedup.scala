@@ -75,7 +75,7 @@ object StreamingDedup {
     // checkpoint restarts batch ids, and bare ids would collide with a
     // previous incarnation's published band files
     val tag = Pipeline.streamTagOf(checkpointDir)
-    docs.writeStream
+    val writer = docs.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val committed = admitBatch(batch, batchId, idCol, textCol,
@@ -91,7 +91,7 @@ object StreamingDedup {
           Dedup.compactBandTable(batch.sparkSession, bandTable,
             buckets): Unit
       }
-      .start()
+    LocalCheckpointFileManager.start(docs.sparkSession)(writer.start())
   }
 
   /** One admission batch — [[admitStream]]'s `foreachBatch` body,

@@ -43,13 +43,14 @@ object StreamingMerge {
   def mergeStream(updates: DataFrame, lake: String, keyCols: Seq[String],
                   checkpointDir: String, seqCol: Option[String] = None,
                   ledger: Option[Pipeline.BatchLedger] = None)
-                 : StreamingQuery =
-    updates.writeStream
+                 : StreamingQuery = {
+    val writer = updates.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         mergeBatch(batch, batchId, lake, keyCols, seqCol, ledger): Unit
       }
-      .start()
+    LocalCheckpointFileManager.start(updates.sparkSession)(writer.start())
+  }
 
   /** One merge batch — [[mergeStream]]'s `foreachBatch` body, callable
     * directly so crash-replay behavior is testable: invoking it again

@@ -35,12 +35,12 @@ object VectorEnrich {
     val centroids = Similarity.loadCentroids(spark, quantizerPath)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     centroids.count(): Unit // materialize once, not inside batch 0
-    stream.writeStream
+    val writer = stream.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         onBatch(Similarity.assignCells(batch, idCol, embCol, centroids),
           batchId)
       }
-      .start()
+    LocalCheckpointFileManager.start(stream.sparkSession)(writer.start())
   }
 }

@@ -182,6 +182,38 @@ class PipelineSpec extends AnyFunSuite {
       s""""attempted": 3, "retried": $retried, "dropped": $dropped}"""), status)
   }
 
+  test("a live run writes its checkpoint logs without checksum or temp " +
+      "files and leaves the session's manager setting as it was") {
+    PipelineSpecState.reset()
+    val payload = java.nio.file.Files
+      .createTempFile("graft-pipe", ".payload").toString
+    java.nio.file.Files.write(java.nio.file.Paths.get(payload),
+      (0 until 3).map(i => singleSiteDoc
+        .replace("Sid=\"2087\"", s"Sid=\"${500 + i}\"") + NUL).mkString
+        .getBytes("UTF-8"))
+    val ckpt = java.nio.file.Files
+      .createTempDirectory("graft-pipe-ckpt").toString
+    val key = "spark.sql.streaming.checkpointFileManagerClass"
+    val before = spark.conf.getOption(key)
+    val raw = spark.readStream.format("transis").option("path", payload)
+      .option("maxdocsperbatch", "1").load()
+    val sink = new KinesisSink(() => new RecordingClient, "stream",
+      sleeper = _ => ())
+    val di = new DiFramework(new RecordingCaller, "disch", "graft_job")
+    val q = Pipeline.run(Pipeline.payloadToRecords(raw), sink, di, ckpt)
+    try q.processAllAvailable() finally q.stop()
+    assert(spark.conf.getOption(key) === before)
+    assert(PipelineSpecState.pushed.size === 3)
+    for (log <- Seq("offsets", "commits")) {
+      val files = new java.io.File(s"$ckpt/$log").list().toSet
+      assert(files === Set("0", "1", "2"), s"$log: $files")
+    }
+    val stray = java.nio.file.Files.walk(java.nio.file.Paths.get(ckpt))
+      .toArray.map(_.toString).filter(n => n.endsWith(".crc") ||
+        n.endsWith(".tmp"))
+    assert(stray.isEmpty, stray.mkString(", "))
+  }
+
   test("D5: K/V extraction from proc response (di_framework.py:44-55)") {
     val di = new DiFramework(new RecordingCaller, "s", "j")
     assert(di.extractValue(
