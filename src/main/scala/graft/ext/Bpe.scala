@@ -504,19 +504,14 @@ object Bpe {
     val df = merges.zipWithIndex
       .map { case ((l, r), i) => (i, l, r) }
       .toDF("rank", "left", "right")
-    val conf = spark.sparkContext.hadoopConfiguration
     val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(conf)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val version = s"merges-${java.util.UUID.randomUUID().toString}"
     df.coalesce(1).write.mode("errorifexists")
       .parquet(new org.apache.hadoop.fs.Path(root, version).toString)
-    val tmp = new org.apache.hadoop.fs.Path(root, s".current.$version.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(version.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    org.apache.hadoop.fs.FileContext.getFileContext(root.toUri, conf)
-      .rename(tmp, new org.apache.hadoop.fs.Path(root, "current"),
-        org.apache.hadoop.fs.Options.Rename.OVERWRITE)
+    graft.sources.SidecarIO.replace(fs,
+      new org.apache.hadoop.fs.Path(root, "current"),
+      version.getBytes(java.nio.charset.StandardCharsets.UTF_8), version)
   }
 
   /** Load the current published merges, rank order. The table is

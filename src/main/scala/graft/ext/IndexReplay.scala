@@ -1,7 +1,8 @@
 package graft.ext
 
+import java.nio.charset.StandardCharsets.UTF_8
 import org.apache.hadoop.fs.{FileSystem, Path}
-import graft.sources.FileManifest
+import graft.sources.{FileManifest, SidecarIO}
 
 /** Crash-replay INTENT records for the maintained indexes' ticks.
   *
@@ -67,7 +68,7 @@ private[ext] object IndexReplay {
         .foreach(p => fs.delete(p, false): Unit)
     val dest = new Path(d, f"v$corpusVersion%012d.done")
     if (!fs.exists(dest)) // replayed tick: marker already present
-      FileManifest.atomicWrite(fs, dest, s"$corpusVersion\n")
+      SidecarIO.create(fs, dest, s"$corpusVersion\n".getBytes(UTF_8))
     val all = fs.listStatus(d)
       .map(_.getPath).filter(_.getName.endsWith(".done")).sortBy(_.getName)
     all.dropRight(20).foreach(p => fs.delete(p, false): Unit)
@@ -103,9 +104,9 @@ private[ext] object IndexReplay {
     }, "index keys must not contain line breaks (intent records are " +
       "line-delimited)")
     val nonce = java.util.UUID.randomUUID().toString.take(8)
-    FileManifest.atomicWrite(fs,
+    SidecarIO.create(fs,
       new Path(dir(stateDir), f"intent-$from%012d-$nonce.ids"),
-      ids.map(_.toString).mkString("", "\n", "\n"))
+      ids.map(_.toString).mkString("", "\n", "\n").getBytes(UTF_8))
   }
 
   /** Union of all pending intents recorded from baseline `from`. */

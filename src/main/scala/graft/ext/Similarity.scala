@@ -339,8 +339,8 @@ object Similarity {
     *
     * `path` is an index ROOT directory: each publish writes a
     * uniquely-named version dir, then atomically flips a `current`
-    * pointer file onto it (`FileContext.rename` with OVERWRITE — the
-    * one genuinely atomic single-file swap the Hadoop FS API offers).
+    * pointer file onto it ([[graft.sources.SidecarIO.replace]], an
+    * atomic single-file swap).
     * A reader therefore always resolves a COMPLETE index — old or new,
     * never absent, never partial — and a trainer crash at any point
     * leaves the previous publish intact (the pointer still names it).
@@ -351,9 +351,8 @@ object Similarity {
     * its files). */
   def saveCentroids(centroids: DataFrame, path: String): Unit = {
     val spark = centroids.sparkSession
-    val conf = spark.sparkContext.hadoopConfiguration
     val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(conf)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val version = s"quantizer-${java.util.UUID.randomUUID().toString}"
     val prev = currentVersion(fs, root)
     // a product quantizer carries its subspace tag; a coarse quantizer
@@ -364,14 +363,11 @@ object Similarity {
     centroids.select(cols: _*)
       .coalesce(1).write.mode("errorifexists")
       .parquet(new org.apache.hadoop.fs.Path(root, version).toString)
-    // flip the pointer: write-tmp-then-rename(OVERWRITE) is atomic
-    val tmp = new org.apache.hadoop.fs.Path(root, s".current.$version.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(version.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    org.apache.hadoop.fs.FileContext.getFileContext(root.toUri, conf)
-      .rename(tmp, new org.apache.hadoop.fs.Path(root, "current"),
-        org.apache.hadoop.fs.Options.Rename.OVERWRITE)
+    // flip the pointer atomically; the version as token names the temp
+    // `.current.<version>.tmp`, which the orphan prune below relies on
+    graft.sources.SidecarIO.replace(fs,
+      new org.apache.hadoop.fs.Path(root, "current"),
+      version.getBytes(java.nio.charset.StandardCharsets.UTF_8), version)
     // Prune superseded versions and orphaned pointer tmps (crashed
     // publishes), keeping the new version, its predecessor, and —
     // crucially — anything NEWER than the predecessor: a concurrent

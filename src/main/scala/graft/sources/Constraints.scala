@@ -1,5 +1,6 @@
 package graft.sources
 
+import java.nio.charset.StandardCharsets.UTF_8
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -77,9 +78,9 @@ object Constraints {
 
   private def publish(fs: FileSystem, lakePath: String, v: Long,
                       cs: Seq[(String, String)]): Unit =
-    FileManifest.atomicWrite(fs, versionPath(lakePath, v),
+    SidecarIO.create(fs, versionPath(lakePath, v),
       cs.map { case (n, e) => s"$n\t$e" }.mkString("", "\n",
-        if (cs.isEmpty) "" else "\n"))
+        if (cs.isEmpty) "" else "\n").getBytes(UTF_8))
 
   private def fsOf(spark: SparkSession, path: String): FileSystem =
     new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)

@@ -91,8 +91,8 @@ object DeletionVector {
     val nonce = java.util.UUID.randomUUID().toString.take(8)
     val name =
       f"${graft.Hashes.md5Hex(rel, 32)}%s-v$version%012d-$nonce%s.dv"
-    FileManifest.atomicWrite(fs, new Path(dvsDir(lakePath), name),
-      content(rel, sorted))
+    SidecarIO.create(fs, new Path(dvsDir(lakePath), name),
+      content(rel, sorted).getBytes(java.nio.charset.StandardCharsets.UTF_8))
     // the writer's own next read should not pay a physical re-read
     putCache(cacheKey(fs, lakePath, name), sorted)
     name

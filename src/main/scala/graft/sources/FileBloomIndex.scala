@@ -179,30 +179,24 @@ object FileBloomIndex {
   private def writeShard(fs: FileSystem, lakePath: String, colName: String,
                          dir: String, entries: Map[String, Entry]): Unit = {
     val dest = shardPath(lakePath, colName, dir)
-    val tmp = new Path(dest.getParent, dest.getName + ".tmp")
-    fs.mkdirs(dest.getParent): Unit
-    val out = fs.create(tmp, true)
-    try {
-      val sb = new StringBuilder
-      // header records the (un-hashable-from-md5) partition dir so
-      // vacuum can reclaim shards of vanished partitions; parseShard
-      // skips it like any non-entry line
-      sb.append("#dir\t").append(dir).append('\n')
-      entries.toSeq.sortBy(_._1).foreach { case (rel, e) =>
-        sb.append(rel).append('\t')
-          .append(java.util.Base64.getEncoder.encodeToString(e.filter))
-          .append('\t')
-          .append(java.util.Base64.getEncoder.encodeToString(
-            e.keyType.json.getBytes(java.nio.charset.StandardCharsets.UTF_8)))
-          .append('\n')
-      }
-      out.write(sb.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    } finally out.close()
+    val sb = new StringBuilder
+    // header records the (un-hashable-from-md5) partition dir so
+    // vacuum can reclaim shards of vanished partitions; parseShard
+    // skips it like any non-entry line
+    sb.append("#dir\t").append(dir).append('\n')
+    entries.toSeq.sortBy(_._1).foreach { case (rel, e) =>
+      sb.append(rel).append('\t')
+        .append(java.util.Base64.getEncoder.encodeToString(e.filter))
+        .append('\t')
+        .append(java.util.Base64.getEncoder.encodeToString(
+          e.keyType.json.getBytes(java.nio.charset.StandardCharsets.UTF_8)))
+        .append('\n')
+    }
     // refresh runs from the single maintenance writer: overwrite is the
-    // contract (this shard is REPLACED with the merged entry set)
-    if (fs.exists(dest)) fs.delete(dest, false): Unit
-    if (!fs.rename(tmp, dest))
-      throw new java.io.IOException(s"bloom shard publish failed: $dest")
+    // contract (this shard is REPLACED with the merged entry set), and
+    // atomic, so a concurrent reader never finds the shard missing
+    SidecarIO.replace(fs, dest,
+      sb.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     shardWrites.incrementAndGet(): Unit
     // invalidate any cached parse of the replaced shard (its key pair
     // is stale, but removing frees the byte budget immediately)

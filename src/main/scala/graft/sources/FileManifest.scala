@@ -1,13 +1,7 @@
 package graft.sources
 
+import java.nio.charset.StandardCharsets.UTF_8
 import org.apache.hadoop.fs.{FileSystem, Path}
-
-/** Two commits raced for the same manifest version number. Retryable:
-  * the loser's state is untouched (the atomic no-overwrite rename is
-  * the commit point) — re-read the new latest version and rebase, which
-  * is exactly what [[FileManifest.commitDelta]] does. */
-class VersionCollisionException(msg: String, cause: Throwable = null)
-  extends java.io.IOException(msg, cause)
 
 /** Versioned per-file manifests for the history lake — the minimal slice
   * of a table format that closes the last reader race
@@ -26,10 +20,11 @@ class VersionCollisionException(msg: String, cause: Throwable = null)
   *  - '''The manifest is the commit point and the source of truth.'''
   *    `v<version>.manifest` lists the CURRENT file set and the RETIRED
   *    set (superseded files awaiting vacuum, with their retirement
-  *    timestamp). Publishing is write-tmp-then-rename — atomic on
-  *    HDFS/local — and readers resolve the highest version, so a crash
-  *    between data-file writes and the manifest publish leaves only
-  *    invisible orphans (vacuumed later), never a partial commit.
+  *    timestamp). Publishing is one no-overwrite [[SidecarIO.create]]
+  *    — atomic on HDFS/local — and readers resolve the highest version,
+  *    so a crash between data-file writes and the manifest publish
+  *    leaves only invisible orphans (vacuumed later), never a partial
+  *    commit.
   *  - '''Optimistic concurrency for data-path writers.''' Versions
   *    advance by one per commit and the atomic no-overwrite root
   *    rename arbitrates races: the loser never corrupts the winner.
@@ -148,14 +143,8 @@ object FileManifest {
     val dest = partitioningPath(lakePath)
     require(!fs.exists(dest),
       s"partitioning already declared at $lakePath")
-    val tmp = new Path(dest.getParent, dest.getName + ".tmp")
-    fs.mkdirs(dest.getParent): Unit
-    val out = fs.create(tmp, true)
-    try out.write(cols.mkString("\t")
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    if (!fs.rename(tmp, dest))
-      throw new java.io.IOException(s"partitioning publish failed: $dest")
+    // a racer past the same check loses the no-overwrite publish
+    SidecarIO.create(fs, dest, cols.mkString("\t").getBytes(UTF_8))
   }
 
   /** REPLACE the declared partitioning — the one caller is
@@ -166,7 +155,7 @@ object FileManifest {
     * would make every writer ambiguous). Empty `cols` removes the
     * declaration (an unpartitioned re-grain) — layout memory then
     * derives the scheme from the restated files, which is consistent
-    * at every crash point of the delete+rename below. */
+    * at every crash point of the atomic replace below. */
   private[sources] def redeclarePartitioning(fs: FileSystem,
       lakePath: String, cols: Seq[String]): Unit = {
     require(cols.distinct == cols,
@@ -174,16 +163,8 @@ object FileManifest {
     require(cols.forall(c => !c.contains('\t') && !c.contains('\n')),
       s"partition column names must be tab/newline-free: $cols")
     val dest = partitioningPath(lakePath)
-    if (cols.isEmpty) { fs.delete(dest, false): Unit; return }
-    val tmp = new Path(dest.getParent, dest.getName + ".tmp")
-    fs.mkdirs(dest.getParent): Unit
-    val out = fs.create(tmp, true)
-    try out.write(cols.mkString("\t")
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    fs.delete(dest, false): Unit
-    if (!fs.rename(tmp, dest))
-      throw new java.io.IOException(s"partitioning publish failed: $dest")
+    if (cols.isEmpty) fs.delete(dest, false): Unit
+    else SidecarIO.replace(fs, dest, cols.mkString("\t").getBytes(UTF_8))
   }
 
   /** The declared partition columns, if any — authoritative over the
@@ -469,103 +450,6 @@ object FileManifest {
     Some(m)
   }
 
-  /** Write `content` to a tmp sibling of `dest` and commit it by
-    * atomic NO-OVERWRITE rename. FileContext.rename (default
-    * Rename.NONE) FAILS if the destination exists, atomically — an
-    * exists() fast path alone is insufficient because
-    * FileSystem.rename on local/POSIX silently REPLACES an existing
-    * destination, so two racing writers (a zombie driver + its
-    * restarted replacement) passing the check together would otherwise
-    * let the second silently overwrite the first's commit. */
-  private[graft] def atomicWrite(fs: FileSystem, dest: Path,
-                                 content: String): Unit = {
-    fs.mkdirs(dest.getParent): Unit
-    if ("file" == fs.getUri.getScheme && tryLinkCommit(fs, dest, content))
-      return
-    renameCommit(fs, dest, content)
-  }
-
-  /** Local-FS commit via hard link; true on success (incl. detected
-    * collision — thrown), false when the volume cannot hard-link
-    * (VFAT/exFAT, some FUSE/SMB mounts) so the caller falls back to
-    * the rename path that works everywhere. */
-  private def tryLinkCommit(fs: FileSystem, dest: Path,
-                            content: String): Boolean = {
-    if (true) {
-      // LOCAL commit primitive: hard-link, not rename. Hadoop's local
-      // FileContext rename is NOT atomic-no-overwrite for checksummed
-      // files — the dest-exists check, the .crc rename, and the data
-      // rename are three separate ops, so a losing racer can replace
-      // the winner's .crc sidecar and leave a PERSISTENT checksum
-      // mismatch on an otherwise-correct manifest (observed under the
-      // threaded OCC spec). link(2) refuses atomically when dest
-      // exists, and writing the tmp through java.nio creates no .crc
-      // at all, so there is no sidecar to tear. HDFS/S3A keep the
-      // FileContext path below (their renames are single-object).
-      val destFile = java.nio.file.Paths.get(fs.makeQualified(dest).toUri)
-      val tmpFile = destFile.resolveSibling(dest.getName +
-        s".${java.util.UUID.randomUUID().toString.take(8)}.tmp")
-      java.nio.file.Files.write(tmpFile,
-        content.getBytes(java.nio.charset.StandardCharsets.UTF_8)): Unit
-      try {
-        java.nio.file.Files.createLink(destFile, tmpFile): Unit
-        // we own dest now; a stale same-name checksum sidecar (e.g. a
-        // rebuilt lake at the same path) would fail verified reads of
-        // the crc-less new content
-        scala.util.Try(java.nio.file.Files.deleteIfExists(
-          destFile.resolveSibling("." + dest.getName + ".crc"))): Unit
-      } catch {
-        case e: java.nio.file.FileAlreadyExistsException =>
-          scala.util.Try(java.nio.file.Files.deleteIfExists(tmpFile)): Unit
-          throw new VersionCollisionException(
-            s"manifest version collision at $dest: two writers raced", e)
-        case _: UnsupportedOperationException | _: java.io.IOException =>
-          // the volume cannot hard-link — clean up and report "not
-          // handled" so the portable rename path takes over
-          scala.util.Try(java.nio.file.Files.deleteIfExists(tmpFile)): Unit
-          return false
-      }
-      scala.util.Try(java.nio.file.Files.deleteIfExists(tmpFile)): Unit
-      return true
-    }
-    false
-  }
-
-  private def renameCommit(fs: FileSystem, dest: Path,
-                           content: String): Unit = {
-    // tmp name unique per ATTEMPT: two optimistic committers racing the
-    // same destination version must not share a tmp path (one's rename
-    // would steal the other's half-written bytes)
-    val tmp = new Path(dest.getParent, dest.getName +
-      s".${java.util.UUID.randomUUID().toString.take(8)}.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(content.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    try {
-      org.apache.hadoop.fs.FileContext
-        .getFileContext(fs.makeQualified(dest).toUri, fs.getConf)
-        .rename(fs.makeQualified(tmp), fs.makeQualified(dest))
-    } catch {
-      case e: org.apache.hadoop.fs.UnsupportedFileSystemException =>
-        // no FileContext binding for this scheme: fall back to the
-        // plain rename (best effort — callers' exists checks still
-        // guard the common case)
-        if (!fs.rename(tmp, dest))
-          throw new java.io.IOException(s"publish failed: $dest", e)
-      case e: java.io.IOException =>
-        // the loser's tmp is garbage — reclaim it now rather than
-        // letting unique-named tmps accumulate under _manifests
-        scala.util.Try(fs.delete(tmp, false)): Unit
-        // distinguish the retryable case: if the destination exists,
-        // another writer won the rename race — a rebase-and-retry is
-        // safe ([[commitDelta]]); anything else is a real I/O failure
-        if (scala.util.Try(fs.exists(dest)).getOrElse(false))
-          throw new VersionCollisionException(
-            s"manifest version collision at $dest: two writers raced", e)
-        else throw new java.io.IOException(s"publish failure at $dest", e)
-    }
-  }
-
   private def flatContent(m: Manifest): String = {
     val sb = new StringBuilder
     m.schemaV.foreach(sv =>
@@ -600,7 +484,7 @@ object FileManifest {
     val shardedMode =
       latestVersion(fs, lakePath).exists(v => isSharded(fs, lakePath, v))
     if (shardedMode) publishSharded(fs, lakePath, stamped)
-    else atomicWrite(fs, dest, flatContent(stamped))
+    else SidecarIO.create(fs, dest, flatContent(stamped).getBytes(UTF_8))
     recordWitnessed(lakePath, m.version)
   }
 
@@ -707,8 +591,8 @@ object FileManifest {
             if (prev != null) shardCachedLines -= shardWeight(prev)
           }
         }
-        atomicWrite(fs, shardDest,
-          flatContent(Manifest(m.version, entry.cur, entry.ret, entry.dvs)))
+        val shard = Manifest(m.version, entry.cur, entry.ret, entry.dvs)
+        SidecarIO.create(fs, shardDest, flatContent(shard).getBytes(UTF_8))
         // cache what was just written: the writer's NEXT publish
         // reuse-checks this name and its next readVersion reassembles
         // it — neither should pay a physical re-read of bytes this
@@ -721,8 +605,8 @@ object FileManifest {
     // the schema stamp is a ROOT line (shard files never carry one —
     // they are reused across versions, and the stamp is per-commit)
     val schemaLine = m.schemaV.map(sv => s"schema\t$sv").toSeq
-    atomicWrite(fs, dest,
-      (schemaLine ++ shardLines).mkString("", "\n", "\n"))
+    SidecarIO.create(fs, dest,
+      (schemaLine ++ shardLines).mkString("", "\n", "\n").getBytes(UTF_8))
   }
 
   /** Convert a manifest-mode lake to SHARDED manifests: republish the
@@ -788,7 +672,7 @@ object FileManifest {
       throw new IllegalArgumentException(
         s"cannot tag unreachable version $version at $lakePath; " +
           s"retained: ${versions(fs, lakePath).mkString(", ")}")
-    atomicWrite(fs, dest, s"$version\n")
+    SidecarIO.create(fs, dest, s"$version\n".getBytes(UTF_8))
   }
 
   /** All tags as (name, version), sorted by name. */

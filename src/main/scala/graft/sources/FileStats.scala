@@ -201,49 +201,31 @@ object FileStats {
 
   private def publish(fs: FileSystem, lakePath: String,
       stats: Map[(String, String), Option[StatRange]]): Unit = {
-    val dest = new Path(statsPath(lakePath))
-    val tmp = new Path(dest.getParent, dest.getName + ".tmp")
-    fs.mkdirs(dest.getParent): Unit
-    val out = fs.create(tmp, true)
     def b64(s: String): String = "s:" + java.util.Base64.getEncoder
       .encodeToString(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    try {
-      val sb = new StringBuilder
-      sb.append(FormatHeader).append('\n')
-      stats.toSeq.sortBy(_._1).foreach { case ((rel, c), v) =>
-        sb.append(rel).append('\t').append(c).append('\t')
-        v match {
-          case Some(LongRange(mn, mx)) =>
-            sb.append(mn).append('\t').append(mx)
-          case Some(StrRange(mn, mx)) =>
-            sb.append(b64(mn)).append('\t').append(b64(mx))
-          case Some(DoubleRange(mn, mx)) =>
-            sb.append("d:").append(java.lang.Double.toString(mn))
-              .append('\t')
-              .append("d:").append(java.lang.Double.toString(mx))
-          case Some(UnscaledRange(mn, mx)) =>
-            sb.append("u:").append(mn).append('\t')
-              .append("u:").append(mx)
-          case None => sb.append("-\t-")
-        }
-        sb.append('\n')
+    val sb = new StringBuilder
+    sb.append(FormatHeader).append('\n')
+    stats.toSeq.sortBy(_._1).foreach { case ((rel, c), v) =>
+      sb.append(rel).append('\t').append(c).append('\t')
+      v match {
+        case Some(LongRange(mn, mx)) =>
+          sb.append(mn).append('\t').append(mx)
+        case Some(StrRange(mn, mx)) =>
+          sb.append(b64(mn)).append('\t').append(b64(mx))
+        case Some(DoubleRange(mn, mx)) =>
+          sb.append("d:").append(java.lang.Double.toString(mn))
+            .append('\t')
+            .append("d:").append(java.lang.Double.toString(mx))
+        case Some(UnscaledRange(mn, mx)) =>
+          sb.append("u:").append(mn).append('\t')
+            .append("u:").append(mx)
+        case None => sb.append("-\t-")
       }
-      out.write(sb.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    } finally out.close()
-    // atomic replace (no delete-then-rename window that could lose the
-    // whole sidecar to a crash); fall back to the two-step where no
-    // FileContext binding exists — there the loss window is only a
-    // pruning regression, healed by the next refresh
-    try org.apache.hadoop.fs.FileContext
-      .getFileContext(fs.makeQualified(dest).toUri, fs.getConf)
-      .rename(fs.makeQualified(tmp), fs.makeQualified(dest),
-        org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-    catch {
-      case _: org.apache.hadoop.fs.UnsupportedFileSystemException =>
-        fs.delete(dest, false): Unit
-        if (!fs.rename(tmp, dest))
-          throw new java.io.IOException(s"stats publish failed: $dest")
+      sb.append('\n')
     }
+    // atomic replace: no window in which a crash loses the sidecar
+    SidecarIO.replace(fs, new Path(statsPath(lakePath)),
+      sb.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
   }
 
   /** A floating-point footer bound pair folded to a [[DoubleRange]],

@@ -170,16 +170,11 @@ object History {
       .filterNot { case (dir, _) => dir.startsWith("/") } // outside root
       .groupBy(_._1).view.mapValues(_.map(_._2).sorted).toMap
     val manifest = new org.apache.hadoop.fs.Path(compactManifestPath(path))
-    val tmp = new org.apache.hadoop.fs.Path(manifest.getParent,
-      manifest.getName + ".tmp")
     val lines = parts.map(rel =>
       rel + "\t" + snapshot.getOrElse(rel, Seq.empty).mkString(","))
-    val out = fs.create(tmp, true)
-    try out.write(lines.mkString("\n")
+    // recoverCompaction ran first: no earlier manifest can be pending
+    SidecarIO.create(fs, manifest, lines.mkString("\n")
       .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    if (!fs.rename(tmp, manifest))
-      throw new java.io.IOException(s"manifest publish failed: $manifest")
     swapStaged(fs, path, parts.map(rel =>
       rel -> snapshot.getOrElse(rel, Seq.empty).toSet))
     fs.delete(manifest, false): Unit
@@ -3508,15 +3503,9 @@ object History {
       matching
     } else {
       val manifest = new org.apache.hadoop.fs.Path(expireManifestPath(path))
-      val tmp = new org.apache.hadoop.fs.Path(manifest.getParent,
-        manifest.getName + ".tmp")
-      fs.mkdirs(manifest.getParent): Unit
-      val out = fs.create(tmp, true)
-      try out.write(matching.mkString("\n")
+      // recoverExpire ran first: no earlier manifest can be pending
+      SidecarIO.create(fs, manifest, matching.mkString("\n")
         .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
-      if (!fs.rename(tmp, manifest))
-        throw new java.io.IOException(s"expire manifest publish failed: $manifest")
       dropExpired(fs, qRoot, matching)
       fs.delete(manifest, false): Unit
       matching

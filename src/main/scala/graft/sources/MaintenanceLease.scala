@@ -1,5 +1,6 @@
 package graft.sources
 
+import java.nio.charset.StandardCharsets.UTF_8
 import org.apache.hadoop.fs.{FileSystem, Path}
 
 /** Another maintenance agent holds the lake's lease. */
@@ -19,7 +20,7 @@ class LeaseFencedException(msg: String) extends IllegalStateException(msg)
   * retire sets, two feed deliveries fighting over the high water).
   *
   * Mechanics — versioned lease files riding the manifests' atomic
-  * NO-OVERWRITE commit primitive ([[FileManifest.atomicWrite]]), the
+  * NO-OVERWRITE commit primitive ([[SidecarIO.create]]), the
   * same arbiter OCC manifest publishes trust:
   *
   *  - the CURRENT lease is the highest `lease-v<N>` file; acquiring or
@@ -97,8 +98,8 @@ object MaintenanceLease {
     }
     val v = cur.map(_.version + 1).getOrElse(1L)
     val lease = Lease(v, owner, now + ttlMs)
-    try FileManifest.atomicWrite(fs, leasePath(lakePath, v),
-      s"$owner\t${lease.expiresAt}\n")
+    try SidecarIO.create(fs, leasePath(lakePath, v),
+      s"$owner\t${lease.expiresAt}\n".getBytes(UTF_8))
     catch {
       case _: VersionCollisionException =>
         // a racer won this version number — bounce off their lease
@@ -145,8 +146,9 @@ object MaintenanceLease {
   def release(fs: FileSystem, lakePath: String, owner: String): Boolean =
     current(fs, lakePath) match {
       case Some(l) if l.owner == owner =>
-        scala.util.Try(FileManifest.atomicWrite(fs,
-          leasePath(lakePath, l.version + 1), s"$owner\t0\n")).isSuccess
+        scala.util.Try(SidecarIO.create(fs,
+          leasePath(lakePath, l.version + 1), s"$owner\t0\n".getBytes(UTF_8)))
+          .isSuccess
       case _ => false
     }
 

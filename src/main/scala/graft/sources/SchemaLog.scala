@@ -1,5 +1,6 @@
 package graft.sources
 
+import java.nio.charset.StandardCharsets.UTF_8
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types._
@@ -131,56 +132,17 @@ object SchemaLog {
   private def memoryPath(lakePath: String): Path =
     new Path(schemaDir(lakePath), "memory.json")
 
-  /** Last-writer-wins, published by OVERWRITE-BY-RENAME — not the
-    * manifests' atomic no-overwrite commit: every vacuum refreshes the
-    * memory, so a collision here is two snapshots of the same lake
-    * racing — either is a valid memory. The rename (vs. writing the
-    * destination in place) makes each published file ALL-OR-NOTHING: a
-    * crash mid-write can no longer destroy the previously valid memory
-    * — the exact last-resort artifact the fallback depends on (ADVICE
-    * r17). A torn concurrent read still parses as None in
-    * [[readMemory]] and only degrades the LAST-RESORT fallback, never
-    * a committed artifact. */
+  /** Last-writer-wins, published by atomic overwrite
+    * ([[SidecarIO.replace]]) — not the manifests' no-overwrite commit:
+    * every vacuum refreshes the memory, so a collision here is two
+    * snapshots of the same lake racing — either is a valid memory. The
+    * replace (vs. writing the destination in place) makes each
+    * published file ALL-OR-NOTHING: a crash mid-write can no longer
+    * destroy the previously valid memory — the exact last-resort
+    * artifact the fallback depends on (ADVICE r17). */
   def writeMemory(fs: FileSystem, lakePath: String,
-                  schema: StructType): Unit = {
-    val p = memoryPath(lakePath)
-    fs.mkdirs(p.getParent): Unit
-    val bytes = schema.json.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-    if ("file" == fs.getUri.getScheme) {
-      // LOCAL: java.nio atomic replace — no checksum sidecar to tear
-      // (same reasoning as FileManifest.tryLinkCommit: the Hadoop local
-      // FS splits data+crc renames, which can leave a persistent
-      // checksum mismatch; nio writes crc-less and moves atomically)
-      val destFile = java.nio.file.Paths.get(fs.makeQualified(p).toUri)
-      val tmpFile = destFile.resolveSibling(p.getName +
-        s".${java.util.UUID.randomUUID().toString.take(8)}.tmp")
-      java.nio.file.Files.write(tmpFile, bytes): Unit
-      java.nio.file.Files.move(tmpFile, destFile,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE): Unit
-      // a stale same-name checksum sidecar (pre-fix writer, or a
-      // rebuilt lake) would fail verified reads of crc-less content
-      scala.util.Try(java.nio.file.Files.deleteIfExists(
-        destFile.resolveSibling("." + p.getName + ".crc"))): Unit
-    } else {
-      val tmp = new Path(p.getParent, p.getName +
-        s".${java.util.UUID.randomUUID().toString.take(8)}.tmp")
-      val out = fs.create(tmp, true)
-      try out.write(bytes) finally out.close()
-      try org.apache.hadoop.fs.FileContext
-        .getFileContext(fs.makeQualified(p).toUri, fs.getConf)
-        .rename(fs.makeQualified(tmp), fs.makeQualified(p),
-          org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-      catch {
-        case _: org.apache.hadoop.fs.UnsupportedFileSystemException =>
-          // no FileContext binding: plain delete+rename (best effort —
-          // the absence window degrades only the last-resort fallback)
-          fs.delete(p, false): Unit
-          if (!fs.rename(tmp, p))
-            throw new java.io.IOException(s"memory publish failed: $p")
-      }
-    }
-  }
+                  schema: StructType): Unit =
+    SidecarIO.replace(fs, memoryPath(lakePath), schema.json.getBytes(UTF_8))
 
   def readMemory(fs: FileSystem, lakePath: String): Option[StructType] = {
     val p = memoryPath(lakePath)
@@ -271,8 +233,7 @@ object SchemaLog {
 
   private def publish(fs: FileSystem, lakePath: String, v: Long,
                       schema: StructType): Unit =
-    FileManifest.atomicWrite(fs, versionPath(lakePath, v),
-      schema.json)
+    SidecarIO.create(fs, versionPath(lakePath, v), schema.json.getBytes(UTF_8))
 
   /** DDL-AS-COMMIT: publish a DATA-IDENTICAL manifest version right
     * after a metadata-only schema change (declare / evolve / rename /
@@ -418,7 +379,7 @@ object SchemaLog {
     replaceRetired(fs, lakePath, lines)
   }
 
-  /** Publish a REPLACEMENT retired list by overwrite-by-rename —
+  /** Publish a REPLACEMENT retired list by atomic overwrite —
     * all-or-nothing like [[writeMemory]], and deliberately NOT the
     * manifests' no-overwrite commit: the tombstone file is re-written
     * by every later drop (and shrunk by [[undropColumn]]), and DDL
@@ -427,38 +388,9 @@ object SchemaLog {
     * no-overwrite primitive would make the SECOND drop on a lake
     * collide with the first's file — a one-drop-per-lake bug). */
   private def replaceRetired(fs: FileSystem, lakePath: String,
-                             lines: Seq[String]): Unit = {
-    val p = retiredPath(lakePath)
-    fs.mkdirs(p.getParent): Unit
-    val bytes = lines.mkString("\n")
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8)
-    if ("file" == fs.getUri.getScheme) {
-      val destFile = java.nio.file.Paths.get(fs.makeQualified(p).toUri)
-      val tmpFile = destFile.resolveSibling(p.getName +
-        s".${java.util.UUID.randomUUID().toString.take(8)}.tmp")
-      java.nio.file.Files.write(tmpFile, bytes): Unit
-      java.nio.file.Files.move(tmpFile, destFile,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE): Unit
-      scala.util.Try(java.nio.file.Files.deleteIfExists(
-        destFile.resolveSibling("." + p.getName + ".crc"))): Unit
-    } else {
-      val tmp = new Path(p.getParent, p.getName +
-        s".${java.util.UUID.randomUUID().toString.take(8)}.tmp")
-      val out = fs.create(tmp, true)
-      try out.write(bytes) finally out.close()
-      try org.apache.hadoop.fs.FileContext
-        .getFileContext(fs.makeQualified(p).toUri, fs.getConf)
-        .rename(fs.makeQualified(tmp), fs.makeQualified(p),
-          org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-      catch {
-        case _: org.apache.hadoop.fs.UnsupportedFileSystemException =>
-          fs.delete(p, false): Unit
-          if (!fs.rename(tmp, p))
-            throw new java.io.IOException(s"retired publish failed: $p")
-      }
-    }
-  }
+                             lines: Seq[String]): Unit =
+    SidecarIO.replace(fs, retiredPath(lakePath),
+      lines.mkString("\n").getBytes(UTF_8))
 
   /** METADATA-ONLY column drop: commits a new declared-schema version
     * WITHOUT the field — zero data files rewritten; old files keep the

@@ -1,14 +1,15 @@
 package graft.stream
 
-import java.nio.file.{Files, StandardCopyOption, StandardOpenOption}
+import java.nio.file.{Files, StandardOpenOption}
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FSDataInputStream, FileAlreadyExistsException,
-  FileStatus, FileSystem, Path, PathFilter, RawLocalFileSystem}
+import org.apache.hadoop.fs.{FSDataInputStream, FileStatus, FileSystem, Path,
+  PathFilter, RawLocalFileSystem}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.checkpointing.{
   CheckpointFileManager}
 import CheckpointFileManager.CancellableFSDataOutputStream
 import org.apache.spark.sql.streaming.StreamingQuery
+import graft.sources.SidecarIO
 
 /** The streaming checkpoint store (`spark.sql.streaming.
   * checkpointFileManagerClass`) for every query the program starts.
@@ -20,11 +21,13 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * does the same work in-process:
   *
   *  - `createAtomic` writes a hidden temp file beside the target and
-  *    publishes it on close. Without overwrite the publish is a hard
-  *    link, which fails if the target exists: Hadoop's
-  *    `FileAlreadyExistsException`, the old bytes untouched — the signal
-  *    `HDFSMetadataLog` uses to detect a second writer. With overwrite it
-  *    is an atomic rename. Close and cancel never leave the temp file.
+  *    publishes it on close with [[SidecarIO]]'s local publish step.
+  *    Without overwrite the publish is a hard link, which fails if the
+  *    target exists: a Hadoop `FileAlreadyExistsException`
+  *    ([[graft.sources.VersionCollisionException]]), the old bytes
+  *    untouched — the signal `HDFSMetadataLog` uses to detect a second
+  *    writer. With overwrite it is an atomic rename. Close and cancel
+  *    never leave the temp file.
   *  - `mkdirs` is `Files.createDirectories`; `open`, `list`, `exists` and
   *    `delete` go through the raw local filesystem, which forks nothing.
   *
@@ -102,8 +105,8 @@ object LocalCheckpointFileManager {
     override def createAtomic(p: Path, overwriteIfPossible: Boolean)
         : CancellableFSDataOutputStream = {
       val target = file(p)
-      val temp = target.resolveSibling(
-        s".${target.getFileName}.${java.util.UUID.randomUUID}.tmp")
+      val temp = target.resolveSibling(SidecarIO.tempName(
+        target.getFileName.toString, java.util.UUID.randomUUID.toString))
       val out = Files.newOutputStream(temp, StandardOpenOption.CREATE_NEW)
       new AtomicStream(new java.io.BufferedOutputStream(out), temp, target,
         overwriteIfPossible)
@@ -115,7 +118,7 @@ object LocalCheckpointFileManager {
     override def exists(p: Path): Boolean = fs.exists(p)
     override def delete(p: Path): Unit = {
       fs.delete(p, true): Unit
-      dropCrc(file(p))
+      SidecarIO.dropCrc(file(p))
     }
     override def isLocal: Boolean = true
     override def createCheckpointDirectory(): Path = {
@@ -124,10 +127,6 @@ object LocalCheckpointFileManager {
       qualified
     }
   }
-
-  /** Hadoop's checksum sidecar of `f`. */
-  private def dropCrc(f: java.nio.file.Path): Unit =
-    Files.deleteIfExists(f.resolveSibling(s".${f.getFileName}.crc")): Unit
 
   /** Writes `temp`; close publishes it as `target`, cancel discards it. */
   private final class AtomicStream(out: java.io.OutputStream,
@@ -142,17 +141,7 @@ object LocalCheckpointFileManager {
         done = true
         try {
           underlyingStream.close()
-          if (overwrite) {
-            dropCrc(target)
-            Files.move(temp, target, StandardCopyOption.ATOMIC_MOVE): Unit
-          } else {
-            try Files.createLink(target, temp)
-            catch {
-              case _: java.nio.file.FileAlreadyExistsException =>
-                throw new FileAlreadyExistsException(s"$target already exists")
-            }
-            dropCrc(target)
-          }
+          SidecarIO.publishLocal(temp, target, overwrite)
         } finally Files.deleteIfExists(temp): Unit
       }
     }

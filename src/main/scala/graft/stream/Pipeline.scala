@@ -58,10 +58,10 @@ object Pipeline {
     * commit record lives, and survives, with the batch output itself: a
     * process restart constructs a fresh instance over the same dir and
     * reads back exactly the committed set (the "new JVM" case the
-    * in-memory ledger cannot cover). Marker creation is a single file
-    * create on the lake's filesystem; `lastCommitted` is one dir listing
-    * of marker files (never data). Underscore-prefixed, so parquet
-    * readers skip the dir. */
+    * in-memory ledger cannot cover). Marker creation is one
+    * [[graft.sources.SidecarIO.replace]] on the lake's filesystem;
+    * `lastCommitted` is one dir listing of marker files (never data).
+    * Underscore-prefixed, so parquet readers skip the dir. */
   class FileBatchLedger(dir: String) extends BatchLedger {
     private def fs(p: org.apache.hadoop.fs.Path) =
       p.getFileSystem(SparkSession.active.sparkContext.hadoopConfiguration)
@@ -93,9 +93,7 @@ object Pipeline {
     override def markCommitted(batchId: Long): Unit = {
       val p = new org.apache.hadoop.fs.Path(dir, s"batch-$batchId")
       val f = fs(p)
-      f.mkdirs(p.getParent): Unit
-      val out = f.create(p, true)
-      try out.write(Array.emptyByteArray) finally out.close()
+      graft.sources.SidecarIO.replace(f, p, Array.emptyByteArray)
       val entries = f.listStatus(p.getParent)
         .flatMap(s => markerId(s.getPath.getName).map(_ -> s.getPath))
       if (entries.nonEmpty) {

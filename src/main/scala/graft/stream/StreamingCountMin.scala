@@ -106,24 +106,17 @@ object StreamingCountMin {
 
   private def writeState(fs: org.apache.hadoop.fs.FileSystem,
                          statePath: String, s: State): Unit = {
-    val dest = currentPath(statePath)
-    val tmp = new Path(statePath, s".current.${s.tag}-${s.batchId}.tmp")
-    fs.mkdirs(dest.getParent): Unit
-    val out = fs.create(tmp, true)
-    try {
-      val dout = new java.io.DataOutputStream(out)
-      val tagBytes = s.tag.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-      dout.writeInt(tagBytes.length)
-      dout.write(tagBytes)
-      dout.writeLong(s.batchId)
-      dout.writeInt(s.sketch.length)
-      dout.write(s.sketch)
-      dout.flush()
-    } finally out.close()
+    val bytes = new java.io.ByteArrayOutputStream
+    val dout = new java.io.DataOutputStream(bytes)
+    val tagBytes = s.tag.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+    dout.writeInt(tagBytes.length)
+    dout.write(tagBytes)
+    dout.writeLong(s.batchId)
+    dout.writeInt(s.sketch.length)
+    dout.write(s.sketch)
+    dout.flush()
     // single atomic commit: state + high-water id flip together
-    org.apache.hadoop.fs.FileContext.getFileContext(
-        fs.makeQualified(dest).toUri, fs.getConf)
-      .rename(fs.makeQualified(tmp), fs.makeQualified(dest),
-        org.apache.hadoop.fs.Options.Rename.OVERWRITE)
+    graft.sources.SidecarIO.replace(fs, currentPath(statePath),
+      bytes.toByteArray)
   }
 }

@@ -294,11 +294,32 @@ class LocalCheckpointFileManagerSpec extends AnyFunSuite {
     val graftDir = sub("graft")
     val graftManager = atomic(new LocalCheckpointFileManager(graftDir, conf),
       graftDir)
+    // the small-file publish: once, by atomic overwrite, and the local
+    // FileContext overwrite rename the stats sidecar used before it
+    val sidecarDir = sub("sidecar")
+    val sidecarCreate = p50(i => graft.sources.SidecarIO.create(local,
+      new Path(sidecarDir, s"$i"), bytes))
+    val sidecarReplace = p50(_ => graft.sources.SidecarIO.replace(local,
+      new Path(sidecarDir, "replaced"), bytes))
+    val renameDir = sub("rename")
+    val fileContext = org.apache.hadoop.fs.FileContext
+      .getFileContext(renameDir.toUri, conf)
+    val contextRename = p50 { i =>
+      val tmp = new Path(renameDir, s".replaced.$i.tmp")
+      val out = local.create(tmp, true)
+      out.write(bytes); out.close()
+      fileContext.rename(tmp, new Path(renameDir, "replaced"),
+        org.apache.hadoop.fs.Options.Rename.OVERWRITE)
+    }
     info(s"native hadoop loaded: " +
       org.apache.hadoop.util.NativeCodeLoader.isNativeCodeLoaded)
     info(f"p50 ms over $n calls: LocalFileSystem.create $create%.2f, " +
       f"mkdirs $mkdirs%.2f, setPermission $setPermission%.2f; " +
       f"createAtomic: Spark default $sparkDefault%.2f, graft $graftManager%.2f")
+    info(f"p50 ms over $n calls: SidecarIO.create $sidecarCreate%.2f, " +
+      f"SidecarIO.replace $sidecarReplace%.2f; LocalFileSystem.create " +
+      f"plus FileContext OVERWRITE rename $contextRename%.2f")
     assert(names(graftDir).size === n + 1)
+    assert(names(sidecarDir).size === n + 2)
   }
 }

@@ -2,7 +2,8 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import graft.sources.{FileManifest, History, VersionCollisionException}
+import graft.sources.{FileManifest, History, SidecarIO,
+  VersionCollisionException}
 
 /** Optimistic-concurrency manifest commits ([[FileManifest.commitDelta]]):
   * disjoint commits re-base and land, true write-write conflicts fail
@@ -116,6 +117,14 @@ class OccCommitSpec extends AnyFunSuite {
     assert(m.curSet.exists(_.contains("part-")))
     // and a pinned read through the reader stack still answers
     assert(History.readPinned(spark, dir).count() === 2L)
+    // the overwrite publish too: a sidecar first written through the
+    // checksummed local filesystem (with its .crc), then replaced
+    val sidecar = new org.apache.hadoop.fs.Path(s"$dir/_manifests/replaced")
+    val old = fs.create(sidecar, true)
+    try old.write("old".getBytes("UTF-8")) finally old.close()
+    assert(new java.io.File(mdir, ".replaced.crc").exists())
+    SidecarIO.replace(fs, sidecar, "new bytes".getBytes("UTF-8"))
+    assert(SidecarIO.readString(fs, sidecar) === "new bytes")
   }
 
   test("concurrent appenders all land without loss (threaded)") {
