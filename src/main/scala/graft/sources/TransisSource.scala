@@ -38,6 +38,8 @@ trait PayloadTransport extends Serializable {
   def available(): Long
   /** Read documents [from, until). May throw transient IO errors. */
   def read(from: Long, until: Long): Iterator[String]
+  /** Offsets below `end` are committed: they are never read again. */
+  def commit(end: Long): Unit = ()
   /** Release any long-lived resources (driver-side offset tracking). */
   def close(): Unit = ()
 }
@@ -49,11 +51,11 @@ trait PayloadTransport extends Serializable {
   * ([[text]]) or when a filter needs its text.
   *
   * [[advance]] reads from the stream only when no complete document is
-  * buffered, so a LIVE connection can be parked between micro-batches
-  * without waiting on bytes the server hasn't sent yet; bytes already read
-  * for the next document stay buffered and travel with the framer. A
-  * trailing unterminated fragment at EOF is discarded — a connection cut
-  * mid-document must not surface a truncated doc. */
+  * buffered, so a read on a LIVE connection returns its document without
+  * waiting on bytes the server hasn't sent yet; bytes already read for the
+  * next document stay buffered for the next call. A trailing unterminated
+  * fragment at EOF is discarded — a connection cut mid-document must not
+  * surface a truncated doc. */
 private[graft] final class NulFramer(in: java.io.InputStream,
                                      filters: DocFilters = DocFilters()) {
   private var buf = new Array[Byte](64 << 10)
@@ -126,62 +128,6 @@ private[graft] final class NulFramer(in: java.io.InputStream,
   def ready: Int = in.available()
 
   def close(): Unit = try in.close() catch { case _: java.io.IOException => () }
-}
-
-/** Executor-side connection parking lot (the CachedKafkaConsumer idea):
-  * a framer that finished batch [a,b) is parked at position b; the next
-  * batch asking for [b,c) on the same endpoint continues the SAME
-  * connection instead of re-opening and re-skipping b documents. A
-  * sequential replay therefore costs O(stream) bytes and O(1)
-  * connections total, not O(batches) connections / O(stream·batches)
-  * bytes. Misses (restart at an earlier offset, executor loss, broken
-  * connection) fall back to open-and-skip. One entry per endpoint;
-  * replacing a parked entry closes the old connection. */
-private[graft] object TransisConnCache {
-  private case class Parked(pos: Long, framer: NulFramer, parkedAtMs: Long)
-  private val entries =
-    new java.util.concurrent.ConcurrentHashMap[String, Parked]()
-  /** Idle TTL: a parked connection not reclaimed within this window is
-    * closed on next access (abandoned queries would otherwise leak one
-    * socket per endpoint for the JVM's life; most servers would have
-    * dropped the idle socket anyway, so continuing it would just burn a
-    * reconnect attempt). Sequential micro-batches reclaim within
-    * seconds, far inside any sane TTL. */
-  private[graft] var maxIdleMs: Long = 10 * 60 * 1000L
-  private def expired(e: Parked, now: Long): Boolean =
-    now - e.parkedAtMs > maxIdleMs
-  /** Claim the parked framer for `key` if it sits exactly at `from`
-    * and hasn't idled past the TTL. */
-  def take(key: String, from: Long): Option[NulFramer] = {
-    val e = entries.remove(key)
-    if (e == null) None
-    else if (e.pos == from && !expired(e, System.currentTimeMillis()))
-      Some(e.framer)
-    else { e.framer.close(); None }
-  }
-  def park(key: String, pos: Long, framer: NulFramer): Unit = {
-    val now = System.currentTimeMillis()
-    val old = entries.put(key, Parked(pos, framer, now))
-    if (old != null) old.framer.close()
-    // opportunistic reap: parking is the only regular write, so sweep
-    // other endpoints' expired entries here (no background thread)
-    val it = entries.entrySet().iterator()
-    while (it.hasNext) {
-      val kv = it.next()
-      if (expired(kv.getValue, now)) { kv.getValue.framer.close(); it.remove() }
-    }
-  }
-  /** Close and drop the parked connection for one endpoint. */
-  def drop(key: String): Unit = {
-    val e = entries.remove(key)
-    if (e != null) e.framer.close()
-  }
-
-  /** Close and drop every parked connection (tests / shutdown). */
-  def clear(): Unit = {
-    val it = entries.values().iterator()
-    while (it.hasNext) { it.next().framer.close(); it.remove() }
-  }
 }
 
 /** NUL-framed documents in a single growable file, framed by the same
@@ -266,15 +212,25 @@ object FilePayloadTransport {
   * sending without closing the connection, so reads that stall longer
   * than `stallTimeoutMs` abort and count against the reconnect budget).
   *
-  * Documents are framed on NUL bytes as they stream in
-  * (`transis_consumer.py:127-139`); empty fragments are dropped (F1). A
-  * `read(from, until)` opens a fresh connection and skips the first
-  * `from` documents, so offset ranges are reproducible against a
-  * replayable endpoint (the test server, or a replay proxy in front of
-  * the live feed); against a live-only push stream the skip counts from
-  * stream start, i.e. "resume at now" — exactly the reference's
-  * semantics. A stream that ends before delivering the requested range
-  * throws IOException so [[ReconnectingReader]] applies the S2 budget. */
+  * One connection per transport, and the driver owns it: documents are
+  * framed on NUL bytes as they stream in (`transis_consumer.py:127-139`;
+  * empty fragments are dropped, F1), counted by [[available]] and kept
+  * until [[commit]] passes them, so `read(from, until)` serves the very
+  * documents that were counted (Spark's `TextSocketMicroBatchStream`
+  * keeps its rows the same way). A read past what was received receives
+  * on the same connection first. The received count is the high-water
+  * mark: a connection that ends or breaks is replaced by a fresh GET that
+  * skips as many documents as were already received, which resumes at
+  * the next offset on a replaying endpoint (the test server, or a replay
+  * proxy in front of the live feed). The held documents sit in driver
+  * memory, so a restart that replays a long backlog holds all of it
+  * until the batches that read it commit.
+  *
+  * Two losses stay open on a feed that sends a connection only what
+  * arrives after it opened (ROADMAP direction 1): after a cut, that skip
+  * drops as many new documents as were received; and a restarted query,
+  * whose fresh transport has received nothing, drops as many as its
+  * checkpointed offset. */
 class HttpPayloadTransport(url: String,
                            stallTimeoutMs: Int = 20 * 60 * 1000,
                            username: String = null,
@@ -313,136 +269,90 @@ class HttpPayloadTransport(url: String,
     conn.getInputStream
   }
 
-  private def cacheKey: String = s"$effectiveUrl|$username"
+  @transient private var conn: NulFramer = _
+  private var skip = 0L     // documents the connection replays from before `received`
+  private var received = 0L // documents received: the next one's offset
+  private var heldFrom = 0L // offset of held(0); nothing below it is kept
+  private val held = scala.collection.mutable.ArrayDeque.empty[String]
 
-  // ---- driver-side incremental offset tracking -------------------------
-  // One persistent counting connection; newly-arrived frames are counted
-  // per trigger instead of re-reading the whole stream per latestOffset
-  // (round-2 available() re-opened and re-counted EVERYTHING each call —
-  // O(stream²) bytes over a session). Against a live push stream the
-  // connection lives for the whole query; against a bounded replayable
-  // endpoint EOF closes it and the NEXT call re-opens (a fresh GET is the
-  // only way plain HTTP exposes growth), counting the replay cheaply and
-  // taking the high-water mark.
-  @transient private var counter: NulFramer = _
-  private var connCount = 0L // matching docs framed on current connection
-  private var hwm = 0L       // high-water mark across connections
-  private var everRead = false
+  private def connect(): Unit =
+    if (conn == null) { conn = new NulFramer(open(), filters); skip = received }
 
-  /** Documents currently observed on the endpoint. Against a LIVE push
-    * connection this drains whatever has already arrived and counts
-    * incrementally; only when that drain counted nothing new does it
-    * make one blocking read (the push-stream "wait for the server to
+  private def disconnect(): Unit = if (conn != null) { conn.close(); conn = null }
+
+  /** Frame the complete documents already buffered: replayed ones are
+    * skipped, new ones counted and, from `heldFrom` on, kept. */
+  private def frameBuffered(): Unit =
+    while (conn.nextBuffered()) {
+      if (skip > 0) skip -= 1
+      else {
+        if (received >= heldFrom) held += conn.text
+        received += 1
+      }
+    }
+
+  /** Documents received so far. On a LIVE connection this drains whatever
+    * has already arrived; only when that drain received nothing new does
+    * it make one blocking read (the push-stream "wait for the server to
     * send", reference transis_consumer.py:115-126, bounded by the stall
-    * timeout), so counted documents are offered at once and an idle
-    * stream waits here instead of spinning. One connection for the query's
-    * whole life, each byte read once. A bounded endpoint signals EOF;
-    * growth there is only visible through a fresh GET, so EOF re-opens
-    * (at most once per call) and the replayed count folds into the
-    * high-water mark. A connection OPENED within this call that reaches
-    * EOF is already a complete current view — no second GET (round 3
-    * reopened unconditionally after any EOF, reading a bounded endpoint
-    * twice per trigger). */
+    * timeout), so received documents are offered at once and an idle
+    * stream waits here instead of spinning. A stall keeps the connection:
+    * a live feed with no traffic cannot be told from a wedged server. A
+    * bounded endpoint signals EOF; growth there is only visible through a
+    * fresh GET, so EOF re-opens once per call, unless this call's own GET
+    * reached it. Any other IOException drops the connection and is thrown,
+    * so the caller's reconnect budget counts it. */
   override def available(): Long = synchronized {
-    var openedThisCall = false
+    var opened = false
     var go = true
     try {
       while (go) {
-        if (counter == null) {
-          if (openedThisCall) go = false // this call's fresh GET already drained
-          else {
-            counter = new NulFramer(open(), filters)
-            openedThisCall = true
-            connCount = 0
-            everRead = false
-          }
+        if (conn == null) { connect(); opened = true }
+        val before = received
+        var blocked = false
+        while (conn != null && !(conn.ready == 0 && (blocked || received > before))) {
+          if (conn.ready == 0) blocked = true
+          if (conn.fill()) frameBuffered() else disconnect()
         }
-        if (go) {
-          // one blocking read per call when nothing is buffered and
-          // nothing new was counted — the only way to tell "no data yet"
-          // from "connection ended"
-          val before = hwm
-          var blockedOnce = false
-          var inner = true
-          while (inner) {
-            if (counter.ready == 0 && everRead &&
-                (blockedOnce || hwm > before)) inner = false
-            else {
-              if (counter.ready == 0) blockedOnce = true
-              if (!counter.fill()) { // EOF: bounded endpoint fully drained
-                counter.close(); counter = null; inner = false
-              } else {
-                everRead = true
-                while (counter.nextBuffered()) connCount += 1
-                hwm = math.max(hwm, connCount)
-              }
-            }
-          }
-          if (counter != null) go = false // alive and drained: done
-        }
+        go = conn == null && !opened
       }
     } catch {
-      case _: java.net.SocketTimeoutException =>
-        // idle longer than the stall budget: KEEP the connection (a live
-        // feed with no traffic is indistinguishable from a wedged server
-        // by any client; the reader path owns reconnect recovery, and a
-        // recovered server resumes on this same socket incrementally)
-        ()
-      case _: java.io.IOException => // broken connection: reconnect next
-        if (counter != null) counter.close()
-        counter = null
+      case _: java.net.SocketTimeoutException => ()
+      case e: java.io.IOException => disconnect(); throw e
     }
-    hwm
+    received
   }
 
-  override def close(): Unit = synchronized {
-    if (counter != null) { counter.close(); counter = null }
-    // release any connection parked for this endpoint in THIS JVM (local
-    // mode / driver-side reads); executor-side entries age out through
-    // the server's own idle timeout and the IOException-miss fallback
-    TransisConnCache.drop(cacheKey)
+  /** Documents [from, until) as held, each returned as soon as it has
+    * been received. A connection that ends or breaks before `until` is
+    * dropped and the read throws IOException, so [[ReconnectingReader]]
+    * applies the S2 budget and its retry continues on a fresh GET. */
+  override def read(from: Long, until: Long): Iterator[String] =
+    (from until until).iterator.map { i =>
+      synchronized {
+        require(i >= heldFrom, s"document $i is below the committed offset $heldFrom")
+        try {
+          while (received <= i) {
+            connect()
+            frameBuffered()
+            if (received <= i && !conn.fill()) {
+              disconnect()
+              throw new java.io.IOException(
+                s"transis stream ended at doc $received before requested $until")
+            }
+          }
+        } catch { case e: java.io.IOException => disconnect(); throw e }
+        held((i - heldFrom).toInt)
+      }
+    }
+
+  override def commit(end: Long): Unit = synchronized {
+    val n = math.min(end - heldFrom, held.size.toLong)
+    if (n > 0) held.remove(0, n.toInt)
+    heldFrom = math.max(heldFrom, end)
   }
 
-  /** Read [from, until), continuing a parked connection when one sits at
-    * exactly `from` (sequential micro-batches never re-open or re-skip);
-    * otherwise open and skip. The connection is parked again — still
-    * open — once the batch is fully served. */
-  override def read(from: Long, until: Long): Iterator[String] = {
-    val framer = TransisConnCache.take(cacheKey, from).getOrElse {
-      val f = new NulFramer(open(), filters)
-      var skipped = 0L
-      while (skipped < from) {
-        if (!f.advance()) {
-          f.close()
-          throw new java.io.IOException(
-            s"transis stream ended before resume offset $from")
-        }
-        skipped += 1
-      }
-      f
-    }
-    new Iterator[String] with java.io.Closeable {
-      private var served = from
-      override def hasNext: Boolean = served < until
-      override def next(): String = {
-        if (!hasNext) throw new NoSuchElementException
-        if (!framer.advance()) {
-          framer.close()
-          throw new java.io.IOException(
-            s"transis stream ended at doc $served before requested $until")
-        }
-        val d = framer.text
-        served += 1
-        if (served == until) TransisConnCache.park(cacheKey, until, framer)
-        d
-      }
-      /** Abandoned mid-range (task kill/retry, query stopped): the framer
-        * sits at an offset no sequential successor will ask for, so close
-        * it rather than park it. Fully-served iterators already parked —
-        * close() is then a no-op (double-close of the stream is safe). */
-      override def close(): Unit = if (served < until) framer.close()
-    }
-  }
+  override def close(): Unit = synchronized(disconnect())
 }
 
 /** Cheap per-document metadata probes (no XML parse): the root's first
@@ -487,59 +397,68 @@ case class DocFilters(docType: Option[String] = None,
 
 /** Serializable transport selector: http(s) paths get the live HTTP
   * transport, anything else the file transport. Carried into executors
-  * by the input partitions. */
+  * by file input partitions only. */
 case class TransportConfig(path: String,
                            stallTimeoutMs: Int = 20 * 60 * 1000,
                            username: String = null,
                            password: String = null,
                            filters: DocFilters = DocFilters()) extends Serializable {
+  private def isHttp: Boolean =
+    path.startsWith("http://") || path.startsWith("https://")
+
   def newTransport(): PayloadTransport =
-    if (path.startsWith("http://") || path.startsWith("https://"))
-      new HttpPayloadTransport(path, stallTimeoutMs, username, password, filters)
+    if (isHttp) new HttpPayloadTransport(path, stallTimeoutMs, username, password, filters)
     else new FilePayloadTransport(path, filters)
+
+  /** The input partition for documents [from, until) of `reader`'s
+    * transport: an HTTP batch is read here, on the driver, and carries its
+    * documents, so executors open no connection and see no credentials; a
+    * file batch carries the range, which its executor reads by index. */
+  def partition(reader: ReconnectingReader, from: Long, until: Long): InputPartition =
+    if (isHttp) TransisDocsPartition(reader.read(from, until).toArray)
+    else TransisInputPartition(this, from, until)
 }
 
-/** S2 reconnect budget: bounded retries around a transport read; the
-  * budget resets after each successfully delivered document (reference
-  * `transis_consumer.py:140`). */
+/** S2 reconnect budget: consecutive failed opens or reads of `transport`
+  * with no document in between are retried at once, up to `maxReconnects`
+  * times; each received document resets the count (reference
+  * `transis_consumer.py:140-148`). A stall on an idle live connection is
+  * not a failure (see [[HttpPayloadTransport.available]]). */
 class ReconnectingReader(transport: PayloadTransport, maxReconnects: Int) {
-  def read(from: Long, until: Long): Iterator[String] with java.io.Closeable =
-    new Iterator[String] with java.io.Closeable {
+  private var failures = 0
+  private var seen = 0L
+
+  private def failed(e: java.io.IOException): Unit = {
+    failures += 1
+    if (failures > maxReconnects)
+      throw new java.io.IOException(
+        s"transis stream failed after $maxReconnects reconnects", e)
+  }
+
+  /** `transport.available()` under the budget; a count past every earlier
+    * one means a document was received. */
+  def available(): Long = {
+    var n = -1L
+    while (n < 0) try n = transport.available()
+      catch { case e: java.io.IOException => failed(e) }
+    if (n > seen) { seen = n; failures = 0 }
+    n
+  }
+
+  def read(from: Long, until: Long): Iterator[String] = new Iterator[String] {
     private var pos = from
-    private var attempts = 0
     private var inner: Iterator[String] = Iterator.empty
-    private def reconnect(): Unit = { inner = transport.read(pos, until) }
-    /** Release the underlying transport iterator when the range was
-      * abandoned before `until` (task kill, query stop, reconnect give-up)
-      * — otherwise the HTTP framer it holds leaks its connection. */
-    override def close(): Unit = inner match {
-      case c: java.io.Closeable => c.close()
-      case _ => ()
-    }
     override def hasNext: Boolean = pos < until
     override def next(): String = {
       while (true) {
         try {
-          if (!inner.hasNext) reconnect()
+          if (!inner.hasNext) inner = transport.read(pos, until)
           val doc = inner.next()
           pos += 1
-          attempts = 0 // reset per successful document
+          failures = 0
           return doc
         } catch {
-          case e: java.io.IOException =>
-            attempts += 1
-            // close the broken transport iterator before discarding it —
-            // its framer still holds the dead HTTP connection (the
-            // "stream ended" path closes itself; double-close is safe)
-            inner match {
-              case c: java.io.Closeable =>
-                try c.close() catch { case _: java.io.IOException => () }
-              case _ => ()
-            }
-            inner = Iterator.empty
-            if (attempts > maxReconnects)
-              throw new java.io.IOException(
-                s"transis stream failed after $maxReconnects reconnects", e)
+          case e: java.io.IOException => inner = Iterator.empty; failed(e)
         }
       }
       throw new IllegalStateException("unreachable")
@@ -658,16 +577,22 @@ class TransisScan(config: TransportConfig, schema: StructType,
     new TransisMicroBatchStream(config, schema, maxReconnects, maxDocsPerBatch)
 }
 
+/** A file batch: its executor reads documents [from, until) by index. */
 case class TransisInputPartition(config: TransportConfig, from: Long, until: Long)
   extends InputPartition
+
+/** An HTTP batch: the documents the driver received, shipped in the
+  * partition (Spark's `TextSocketInputPartition`). */
+case class TransisDocsPartition(docs: Array[String]) extends InputPartition
 
 class TransisPartitionReaderFactory(schema: StructType, maxReconnects: Int)
     extends PartitionReaderFactory {
   override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
-    val part = p.asInstanceOf[TransisInputPartition]
-    val docs = new ReconnectingReader(
-      part.config.newTransport(), maxReconnects)
-      .read(part.from, part.until)
+    val docs = p match {
+      case TransisDocsPartition(d) => d.iterator
+      case TransisInputPartition(config, from, until) =>
+        new ReconnectingReader(config.newTransport(), maxReconnects).read(from, until)
+    }
     val fields: Array[String => UTF8String] = schema.fieldNames.map {
       case "value" => (d: String) => UTF8String.fromString(d)
       case "doc_type" => (d: String) =>
@@ -681,10 +606,7 @@ class TransisPartitionReaderFactory(schema: StructType, maxReconnects: Int)
         if (docs.hasNext) { current = docs.next(); true } else false
       override def get(): InternalRow =
         InternalRow.fromSeq(fields.toIndexedSeq.map(_.apply(current)))
-      // park-or-close the underlying framer: a reader torn down
-      // mid-range (task kill/retry, query stop) must not leak its
-      // HTTP connection
-      override def close(): Unit = docs.close()
+      override def close(): Unit = ()
     }
   }
 }
@@ -693,8 +615,10 @@ class TransisPartitionReaderFactory(schema: StructType, maxReconnects: Int)
 class TransisBatch(config: TransportConfig, schema: StructType,
                    maxReconnects: Int) extends Batch {
   override def planInputPartitions(): Array[InputPartition] = {
-    val n = config.newTransport().available()
-    Array(TransisInputPartition(config, 0L, n))
+    val transport = config.newTransport()
+    val reader = new ReconnectingReader(transport, maxReconnects)
+    try Array(config.partition(reader, 0L, reader.available()))
+    finally transport.close()
   }
   override def createReaderFactory(): PartitionReaderFactory =
     new TransisPartitionReaderFactory(schema, maxReconnects)
@@ -707,12 +631,14 @@ class TransisBatch(config: TransportConfig, schema: StructType,
   * document at a time (`transis_consumer.py:115-151`; set
   * `maxDocsPerBatch=1` for exactly that cadence). `Trigger.AvailableNow`
   * pins the target offset at query start, drains it in bounded batches,
-  * and stops. */
+  * and stops. One transport serves the whole query, under one S2 budget:
+  * over HTTP it is the query's only connection. */
 class TransisMicroBatchStream(config: TransportConfig, schema: StructType,
                               maxReconnects: Int,
                               maxDocsPerBatch: Option[Long] = None)
     extends MicroBatchStream with SupportsTriggerAvailableNow {
   private val transport = config.newTransport()
+  private val reader = new ReconnectingReader(transport, maxReconnects)
   private var availableNowTarget: Option[Long] = None
   private var lastSeen = 0L
 
@@ -723,17 +649,19 @@ class TransisMicroBatchStream(config: TransportConfig, schema: StructType,
       .getOrElse(ReadLimit.allAvailable())
 
   override def prepareForTriggerAvailableNow(): Unit = {
-    lastSeen = transport.available()
+    lastSeen = reader.available()
     availableNowTarget = Some(lastSeen)
   }
 
   /** Admission-controlled end offset: everything available, capped to
     * start + maxRows, and never past an AvailableNow pin. */
   override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
-    val avail = availableNowTarget.getOrElse {
-      lastSeen = transport.available(); lastSeen
-    }
     val s = start.asInstanceOf[DocOffset].n
+    // the query's start offset, or the end of a batch already run
+    transport.commit(s)
+    val avail = availableNowTarget.getOrElse {
+      lastSeen = reader.available(); lastSeen
+    }
     val end = limit match {
       case mr: ReadMaxRows => math.min(avail, s + mr.maxRows())
       case _ => avail
@@ -754,10 +682,11 @@ class TransisMicroBatchStream(config: TransportConfig, schema: StructType,
     val s = start.asInstanceOf[DocOffset].n
     val e = end.asInstanceOf[DocOffset].n
     if (e <= s) Array.empty
-    else Array(TransisInputPartition(config, s, e))
+    else Array(config.partition(reader, s, e))
   }
   override def createReaderFactory(): PartitionReaderFactory =
     new TransisPartitionReaderFactory(schema, maxReconnects)
-  override def commit(end: Offset): Unit = ()
+  override def commit(end: Offset): Unit =
+    transport.commit(end.asInstanceOf[DocOffset].n)
   override def stop(): Unit = transport.close()
 }

@@ -79,10 +79,10 @@ class LiveMainSpec extends AnyFunSuite {
     }
   }
 
-  test("a live HTTP stream costs two connections however many batches run") {
-    // one counting connection (latestOffset) and one reading connection
-    // (parked between batches); a batch that read its documents twice
-    // would miss the parked connection and re-open the stream each batch
+  test("a live HTTP stream costs one connection however many batches run") {
+    // the driver's counting connection also serves every batch's
+    // documents; a batch that re-read them on a connection of its own
+    // would open a second one
     val doc = (singleSiteDoc + NUL).getBytes("UTF-8")
     val srv = new LiveServer(doc)
     val ckpt = java.nio.file.Files
@@ -118,7 +118,7 @@ class LiveMainSpec extends AnyFunSuite {
       val procs = caller.synchronized(caller.calls.map(_._1).toList)
       assert(procs === List.fill(3)(List("disch.strt_job",
         "disch.log_job_stus", "disch.end_job")).flatten)
-      assert(srv.accepted.get() === 2, s"accepted=${srv.accepted.get()}")
+      assert(srv.accepted.get() === 1, s"accepted=${srv.accepted.get()}")
     } finally {
       wired.query.stop()
       srv.close()

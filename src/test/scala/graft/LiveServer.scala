@@ -5,10 +5,13 @@ package graft
   * reference's real ingress — one streaming GET that stays up). `send`
   * appends to the stream and writes to every open connection, so a
   * reader that re-opens and skips sees the same documents as one that
-  * stayed connected. Counts accepts. */
-class LiveServer(initial: Array[Byte]) {
+  * stayed connected. With `replay = false` a connection gets only the
+  * bytes sent after it opened, as the real feed does. Counts accepts, and
+  * `connected` counts the connections that `send` reaches. */
+class LiveServer(initial: Array[Byte], replay: Boolean = true) {
   private val server = new java.net.ServerSocket(0)
   val accepted = new java.util.concurrent.atomic.AtomicInteger(0)
+  val connected = new java.util.concurrent.atomic.AtomicInteger(0)
   private val sent = new java.io.ByteArrayOutputStream()
   sent.write(initial)
   private val outs = scala.collection.mutable.ArrayBuffer.empty[java.io.OutputStream]
@@ -43,9 +46,10 @@ class LiveServer(initial: Array[Byte]) {
         LiveServer.this.synchronized {
           out.write("HTTP/1.0 200 OK\r\nContent-Type: text/xml\r\n\r\n"
             .getBytes("UTF-8"))
-          sent.writeTo(out)
+          if (replay) sent.writeTo(out)
           out.flush() // socket intentionally left open
           outs += out
+          connected.incrementAndGet()
         }
       } catch {
         case _: Throwable if !running => ()

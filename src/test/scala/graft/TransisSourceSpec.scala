@@ -162,36 +162,6 @@ class TransisSourceSpec extends AnyFunSuite {
     } finally srv.close()
   }
 
-  test("parked connections expire after the idle TTL") {
-    import graft.sources.TransisConnCache
-    val srv = new LoopbackServer(Seq(payloadBytes("doc-a", "doc-b")))
-    val saved = TransisConnCache.maxIdleMs
-    try {
-      val t = new HttpPayloadTransport(srv.url, stallTimeoutMs = 5000)
-      // serve [0,1): the framer parks at position 1 for the next batch
-      assert(new ReconnectingReader(t, 1).read(0, 1).toList === List("doc-a"))
-      // fresh park is reclaimable…
-      assert(TransisConnCache.take(s"${srv.url}|null", 1L).isDefined)
-      // …but one older than the TTL is closed and dropped
-      assert(new ReconnectingReader(t, 1).read(0, 1).toList === List("doc-a"))
-      TransisConnCache.maxIdleMs = 0L
-      Thread.sleep(5)
-      assert(TransisConnCache.take(s"${srv.url}|null", 1L).isEmpty)
-    } finally { TransisConnCache.maxIdleMs = saved; srv.close() }
-  }
-
-  test("a partition reader abandoned mid-range closes its connection") {
-    val srv = new LoopbackServer(Seq(payloadBytes("doc-a", "doc-b", "doc-c")))
-    try {
-      val t = new HttpPayloadTransport(srv.url, stallTimeoutMs = 5000)
-      val it = new ReconnectingReader(t, 1).read(0, 3)
-      assert(it.next() === "doc-a")
-      it.close() // abandoned at doc 1 of [0,3): must close, not park
-      assert(graft.sources.TransisConnCache
-        .take(s"${srv.url}|null", 1L).isEmpty)
-    } finally srv.close()
-  }
-
   test("S2 over HTTP: a permanently dead endpoint exhausts the budget") {
     val srv = new LoopbackServer(Seq(payloadBytes("doc-a").take(2)))
     try {
@@ -292,8 +262,8 @@ class TransisSourceSpec extends AnyFunSuite {
   test("HTTP offsets are incremental: O(1) connections across micro-batches") {
     // Live connection, 2 docs, 1 doc/batch → 2 micro-batches. Round-2
     // behavior opened a full-stream-re-reading connection per trigger
-    // PLUS one per batch (≥5 accepts here); incremental counting + the
-    // parked reader connection need exactly 2: one counting, one reading.
+    // PLUS one per batch (≥5 accepts here); the driver's counting
+    // connection also serves the batches' documents, so exactly 1.
     val srv = new LiveServer(payloadBytes("doc-a", "doc-b"))
     try {
       val raw = spark.readStream.format("transis")
@@ -304,8 +274,97 @@ class TransisSourceSpec extends AnyFunSuite {
       try {
         q.processAllAvailable()
         assert(spark.table("transis_live_conns").count() === 2)
-        assert(srv.accepted.get() === 2, s"accepted=${srv.accepted.get()}")
+        assert(srv.accepted.get() === 1, s"accepted=${srv.accepted.get()}")
       } finally q.stop()
+    } finally srv.close()
+  }
+
+  test("a feed that does not replay: each document reaches the sink in the batch that counted it") {
+    // the server sends a connection only what arrives after it opened, as
+    // the real feed does; a batch that re-read its documents on a second
+    // connection would find them gone and wait for later ones
+    import scala.jdk.CollectionConverters._
+    val srv = new LiveServer(Array.empty, replay = false)
+    val got = new java.util.concurrent.ConcurrentLinkedQueue[(Long, List[String])]()
+    try {
+      val q = spark.readStream.format("transis")
+        .option("path", srv.url).option("stalltimeoutms", "1000")
+        .option("maxdocsperbatch", "1").load()
+        .select(col("value")).writeStream
+        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, id: Long) =>
+          got.add((id, batch.collect().map(_.getString(0)).toList)): Unit
+        }.start()
+      try {
+        val deadline = System.currentTimeMillis() + 30000
+        def awaitUntil(done: => Boolean): Unit =
+          while (!done && q.isActive && System.currentTimeMillis() < deadline)
+            Thread.sleep(20)
+        def delivered = got.asScala.toList.flatMap(_._2)
+        awaitUntil(srv.connected.get() > 0)
+        for (i <- 1 to 3) {
+          // the next document is sent only once the last one was delivered,
+          // so the last one is not pushed out by a later arrival
+          srv.send(payloadBytes(s"doc-$i"))
+          awaitUntil(delivered.size >= i)
+          assert(delivered === (1 to i).map(j => s"doc-$j").toList,
+            s"active=${q.isActive} ${q.exception}")
+        }
+        awaitUntil(q.recentProgress.count(_.numInputRows > 0) >= 3)
+        val ends = q.recentProgress.filter(_.numInputRows > 0)
+          .map(p => p.batchId -> p.sources.head.endOffset.toLong).toMap
+        got.asScala.filter(_._2.nonEmpty).foreach { case (id, docs) =>
+          assert(docs === List(s"doc-${ends(id)}"), s"batch $id")
+        }
+        assert(srv.accepted.get() === 1)
+      } finally q.stop()
+    } finally srv.close()
+  }
+
+  test("S2 over HTTP: a query on a closed port fails after the reconnect budget") {
+    val port = {
+      val s = new java.net.ServerSocket(0)
+      try s.getLocalPort finally s.close()
+    }
+    val q = spark.readStream.format("transis")
+      .option("path", s"http://127.0.0.1:$port/transis/pushservice")
+      .option("stalltimeoutms", "2000").option("maxreconnects", "2").load()
+      .select(col("value")).writeStream.format("noop").start()
+    try {
+      val ex = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+        q.awaitTermination(30000): Unit
+      }
+      val causes = Iterator.iterate[Throwable](ex)(_.getCause).takeWhile(_ != null)
+      assert(causes.exists(c => String.valueOf(c.getMessage)
+        .contains("failed after 2 reconnects")), ex.toString)
+    } finally q.stop()
+  }
+
+  test("planned HTTP partitions carry the documents, not the credentials") {
+    val srv = new LoopbackServer(Seq(payloadBytes("doc-a", "doc-b")))
+    try {
+      import graft.sources.{DocOffset, TransisMicroBatchStream, TransisScan,
+        TransisSourceProvider, TransportConfig}
+      val scan = new TransisScan(
+        TransportConfig(srv.url, 5000, "user", "s3cret-pw"),
+        TransisSourceProvider.schema, 1)
+      val stream = scan.toMicroBatchStream("unused")
+        .asInstanceOf[TransisMicroBatchStream]
+      val streamParts =
+        try stream.planInputPartitions(DocOffset(0L), stream.latestOffset(DocOffset(0L),
+          org.apache.spark.sql.connector.read.streaming.ReadLimit.allAvailable()))
+        finally stream.stop()
+      val parts = scan.toBatch.planInputPartitions() ++ streamParts
+      assert(parts.length === 2)
+      def has(bytes: Array[Byte], s: String) =
+        bytes.containsSlice(s.getBytes("UTF-8"))
+      parts.foreach { p =>
+        val buf = new java.io.ByteArrayOutputStream()
+        val out = new java.io.ObjectOutputStream(buf)
+        out.writeObject(p)
+        out.close()
+        assert(!has(buf.toByteArray, "s3cret-pw"), p.toString)
+        assert(has(buf.toByteArray, "doc-a") && has(buf.toByteArray, "doc-b"))
+      }
     } finally srv.close()
   }
 
